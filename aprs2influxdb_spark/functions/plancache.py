@@ -1,30 +1,47 @@
-"""Session-lifetime LAZY plan-handle cache — ONE implementation of the
+"""Lazy plan-handle and expression caches — ONE implementation of the
 memoized-table-read discipline that ``queries._t``, ``queries._store_t``
-and ``media_store.media_table`` each re-implemented inline (ADVICE r11).
+and ``media_store.media_table`` each re-implemented inline (ADVICE r11),
+and ONE memo for the unresolved Column trees the hot builders reuse.
 
-What it caches: the unresolved DataFrame PLAN handle per (session, key)
-— each ``spark.read.parquet`` costs ~85 ms of driver py4j/footer round
-trips, and the bench's ~160 builders issue ~480 of them per run for
-identical immutable inputs.  Nothing about results or data is memoized;
-every action still scans the parquet inputs, which is exactly the bench
-contract.  Keyed in ``spark.__dict__`` on the session OBJECT, so a new
-session can never see a stale handle.
+:func:`table_plan` caches the unresolved DataFrame PLAN handle per
+(session, key) — each ``spark.read.parquet`` costs ~85 ms of driver
+py4j/footer round trips, and the bench's ~160 builders issue ~480 of
+them per run for identical immutable inputs.  Nothing about results or
+data is memoized; every action still scans the parquet inputs, which is
+exactly the bench contract.  Keyed in ``spark.__dict__`` on the session
+OBJECT, so a new session can never see a stale handle.
+
+:func:`column_memo` caches unresolved Columns (expression trees, no
+plan, no data) — the serializer's ~50 field expressions and 9-way CASE,
+the MinHash/banding trees.  A Column resolves against column names
+afresh in every plan it joins, so it is valid in any session of the
+JVM it was built in.  These entries are keyed on the ``SparkContext``,
+not the session: ``foreachBatch`` hands each micro-batch a NEW Python
+``SparkSession`` wrapper (``ForeachBatchFunction.call``), so a session-
+keyed memo would miss on every batch and repeat the serializer's
+~17,000 py4j calls per trigger.  All those wrappers share the context,
+and a restarted JVM comes with a new context, so the memo never
+outlives its JVM.
 
 Invalidation (ADVICE r11 medium): a cached handle pins Spark's resolved
 schema and file listing at first read, so a path that is REBUILT within
 the same session (testdata regenerated, an ensure_* store recreated)
 must call :func:`invalidate_path` before writing — the ensure_* writers
 do this in their cold-build branch, making a stale-plan read of a
-regenerated store impossible by construction.
+regenerated store impossible by construction.  Columns read no files
+and need no invalidation.
 """
 
 from __future__ import annotations
 
-from typing import Callable
+from typing import Callable, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 
 _CACHE_ATTR = "_aprs2_table_plan_cache"
+_COLUMN_ATTR = "_aprs2_column_memo"
+
+T = TypeVar("T")
 
 
 def table_plan(
@@ -38,6 +55,19 @@ def table_plan(
         df = build()
         cache[key] = df
     return df
+
+
+def column_memo(spark: SparkSession, key: tuple, build: Callable[[], T]) -> T:
+    """Return the unresolved Column(s) ``build()`` made for ``key`` in
+    this SparkContext, building them on first use.  ``build`` may
+    return one Column or any structure of them.  Two threads that miss
+    at once (a stream's batch thread and a driver thread) both build,
+    and both get the first result stored."""
+    cache = spark.sparkContext.__dict__.setdefault(_COLUMN_ATTR, {})
+    cols = cache.get(key)
+    if cols is None:
+        cols = cache.setdefault(key, build())
+    return cols
 
 
 def invalidate_path(spark: SparkSession, path: str) -> None:

@@ -236,6 +236,3 @@ def resize_nearest_rgb(
             o += 3
     return bytes(out)
 
-
-def is_png(payload: bytes) -> bool:
-    return payload is not None and len(payload) >= 8 and payload[:8] == _PNG_SIG

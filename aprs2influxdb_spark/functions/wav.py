@@ -81,10 +81,6 @@ def decode_wav_pcm16(payload: bytes) -> tuple[int, int, list[int]]:
     return sample_rate, channels, samples
 
 
-def is_wav(payload: bytes) -> bool:
-    return len(payload) >= 12 and payload[:4] == b"RIFF" and payload[8:12] == b"WAVE"
-
-
 # ------------------------------------------------------------- G.711
 # Round 6 (verdict-r5 "What's missing #3": audio realism stopped at
 # PCM16 — "a real pipeline's media column needs at least one real

@@ -71,22 +71,6 @@ def compact_equations(packets: DataFrame, order_col: str = "ingest_ts") -> DataF
     )
 
 
-def scale_telemetry(packets: DataFrame, eqns_col: str = "eqns_effective") -> DataFrame:
-    """N2 fused with J1: materialize scaled analog1..5 columns
-    (a*v^2 + b*v + c per channel, :129-133) as native arithmetic."""
-    out = packets
-    for i in range(5):
-        eq = F.col(eqns_col)
-        # F.get: null-tolerant on short arrays (ANSI mode) — see
-        # projections.malformed_predicate for the D3 dead-letter path
-        a = F.coalesce(F.get(F.get(eq, i), 0), F.lit(0.0))
-        b = F.coalesce(F.get(F.get(eq, i), 1), F.lit(1.0))
-        c = F.coalesce(F.get(F.get(eq, i), 2), F.lit(0.0))
-        v = F.get(F.col("telemetry")["vals"], i)
-        out = out.withColumn(f"analog{i + 1}", a * v * v + b * v + c)
-    return out
-
-
 def asof_join(
     left: DataFrame,
     right: DataFrame,

@@ -86,12 +86,12 @@ def shingle_col(spark, text_col: str = "text", n: int = 3):
     the expression-level plan-cache discipline (see
     ``_signatures_from_shingles``): the nested Horner/transform tree
     costs ~0.15 s of driver py4j per build and is identical for every
-    shingle consumer in a session."""
-    from aprs2influxdb_spark.functions.plancache import table_plan
+    shingle consumer in a SparkContext."""
+    from aprs2influxdb_spark.functions.plancache import column_memo
 
-    return table_plan(
+    return column_memo(
         spark,
-        ("expr", "shingles", text_col, n),
+        ("shingles", text_col, n),
         lambda: hashed_shingles(tokens_col(text_col), n),
     )
 
@@ -131,17 +131,17 @@ def _signatures_from_shingles(
     input columns to pass through unchanged (the soak's ingest gate
     keeps the raw payload beside the signature)."""
     from aprs2influxdb_spark.functions.hashing import minhash_coeffs
-    from aprs2influxdb_spark.functions.plancache import table_plan
+    from aprs2influxdb_spark.functions.plancache import column_memo
 
     # The 16-permutation expression tree costs ~0.45 s of driver py4j
     # to BUILD (round 12, cProfile of soft_dedup_weights) and is
     # identical for every consumer — memoize the unresolved Column per
-    # (session, num_hashes); it resolves against column names fresh in
-    # every plan (the _t plan-handle discipline at expression level).
+    # num_hashes; it resolves against column names fresh in every plan
+    # (the _t plan-handle discipline at expression level).
     spark = arr.sparkSession
-    hs = table_plan(
+    hs = column_memo(
         spark,
-        ("expr", "minhash_hs"),
+        ("minhash_hs",),
         lambda: F.transform(F.col("sh"), lambda s: F.pmod(s, F.lit(MINHASH_P))),
     )
     hashed = arr.select(F.col(id_col), *carry, hs.alias("hs"))
@@ -157,7 +157,7 @@ def _signatures_from_shingles(
             ]
         )
 
-    sig = table_plan(spark, ("expr", "minhash_sig", num_hashes), _sig)
+    sig = column_memo(spark, ("minhash_sig", num_hashes), _sig)
     return hashed.select(F.col(id_col), *carry, sig.alias("sig"))
 
 
@@ -192,7 +192,7 @@ def banded_keys(
     :func:`_lsh_index` so the streaming ingest gate can band a
     signature STREAM with the exact same keys the batch index uses).
     ``carry`` columns pass through beside the keys."""
-    from aprs2influxdb_spark.functions.plancache import table_plan
+    from aprs2influxdb_spark.functions.plancache import column_memo
 
     def _bk():
         rows_per_band = num_hashes // bands
@@ -205,9 +205,7 @@ def banded_keys(
         )
 
     # memoized unresolved Column — see _signatures_from_shingles
-    bk = table_plan(
-        sigs.sparkSession, ("expr", "banded_bk", num_hashes, bands), _bk
-    )
+    bk = column_memo(sigs.sparkSession, ("banded_bk", num_hashes, bands), _bk)
     return sigs.select(F.col(id_col), *carry, bk.alias("bk")).select(
         id_col, *carry, "bk.band", "bk.key"
     )

@@ -233,15 +233,6 @@ def line_case() -> Column:
     return expr
 
 
-def with_line(df: DataFrame, eqns: Column | None = None) -> DataFrame:
-    """Add the line-protocol ``line`` column (two-stage, see
-    ``line_case``).  Works on batch and streaming DataFrames alike —
-    both stages are stateless narrow projections."""
-    exprs = field_exprs(eqns)
-    staged = df.select("*", *[c.alias(t) for t, c in exprs.items()])
-    return staged.withColumn("line", line_case()).drop(*exprs.keys())
-
-
 def malformed_predicate(eqns: Column | None = None) -> Column:
     """D3 per-record error isolation (:86-89): rows the reference would
     drop via ``except StandardError`` — telemetry vals present but
@@ -259,18 +250,44 @@ def malformed_predicate(eqns: Column | None = None) -> Column:
     return F.coalesce(bad_vals | bad_eqns, F.lit(False))
 
 
+def _serializer(spark, eqns_col: str | None) -> tuple:
+    """The serializer's unresolved Columns for ``eqns_col``: the known-
+    format and well-formed filters, the aliased field columns of the
+    lower stage, their names and the ``line_case`` upper stage.
+    Building them takes ~17,000 py4j calls (1.9-2.7 s of driver time on
+    a 4-core VM, every micro-batch of the daemon's sink); they are the
+    same for every batch, so they are built once per SparkContext (see
+    ``functions.plancache.column_memo``) and ``to_line_protocol`` then
+    makes ~120 calls."""
+    from aprs2influxdb_spark.functions.plancache import column_memo
+
+    def _build() -> tuple:
+        eqns = F.col(eqns_col) if eqns_col else None
+        exprs = field_exprs(eqns)
+        return (
+            F.col("format").isin(OUTPUT_FORMATS),
+            ~malformed_predicate(eqns),
+            [c.alias(t) for t, c in exprs.items()],
+            list(exprs),
+            line_case(),
+        )
+
+    return column_memo(spark, ("line_protocol", eqns_col), _build)
+
+
 def to_line_protocol(packets: DataFrame, eqns_col: str | None = None, drop_malformed: bool = True) -> DataFrame:
     """D1/D2 dispatch + P1-P9 projection: known output formats only
     (unknown formats dropped, :83-84; telemetry-message emits nothing,
     :1058), one ``line`` string per packet.  Rows the reference's
     error handler would drop (D3) are filtered here — route them to a
     dead-letter sink with ``dead_letters`` instead of the reference's
-    log-and-forget."""
-    eqns = F.col(eqns_col) if eqns_col else None
-    out = packets.filter(F.col("format").isin(OUTPUT_FORMATS))
+    log-and-forget.  Works on batch and streaming DataFrames alike —
+    both serializer stages are stateless narrow projections."""
+    known, well_formed, fields, tokens, line = _serializer(packets.sparkSession, eqns_col)
+    out = packets.filter(known)
     if drop_malformed:
-        out = out.filter(~malformed_predicate(eqns))
-    return with_line(out, eqns)
+        out = out.filter(well_formed)
+    return out.select("*", *fields).withColumn("line", line).drop(*tokens)
 
 
 def dead_letters(packets: DataFrame, eqns_col: str | None = None) -> DataFrame:

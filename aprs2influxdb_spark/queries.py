@@ -3618,16 +3618,26 @@ WHERE {jac} >= {threshold}
 """
 
 
+# The LSH configuration of the near-dup cluster graph, shared by its
+# Spark builders and its DuckDB oracle: both must band and verify alike,
+# or contamination_report's degree >= 1 lex shortcut stops matching the
+# oracle's clusters.  The oracle's shingles are _HSH_SQL's trigrams.
+NEAR_DUP_LSH = {"num_hashes": 16, "bands": 4, "shingle_n": 3, "threshold": 0.5}
+
+
 def q_near_dup_clusters(spark, sf):
     """Connected components over the LSH near-dup graph: doc -> cluster
     canonical (min) id.  Iterative label propagation in Spark; the
     oracle computes the same components with a recursive CTE over the
     identical pair list."""
-    return dd.near_dup_clusters(_t(spark, sf, "documents"))
+    return dd.near_dup_clusters(_t(spark, sf, "documents"), **NEAR_DUP_LSH)
 
 
 def _near_dup_clusters_sql() -> str:
-    pairs = _minhash_lsh_sql()  # identical pair graph as the Spark side
+    lsh = NEAR_DUP_LSH
+    assert lsh["shingle_n"] == 3, "the oracle shingles trigrams only"
+    # identical pair graph as the Spark side
+    pairs = _minhash_lsh_sql(lsh["num_hashes"], lsh["bands"], lsh["threshold"])
     return f"""
 WITH RECURSIVE pairs AS ({pairs}),
 edges AS (
@@ -3670,7 +3680,7 @@ def q_soft_dedup_weights(spark, sf):
     (source, cluster) aggregate and one cluster-size join; the rollup
     is map-side combinable on |sources| groups."""
     docs = _t(spark, sf, "documents")
-    clusters = dd.near_dup_clusters(docs)
+    clusters = dd.near_dup_clusters(docs, **NEAR_DUP_LSH)
     sizes = clusters.groupBy("cluster_id").agg(F.count("*").alias("cluster_size"))
     per = (
         docs.select(
@@ -3755,7 +3765,7 @@ def q_contamination_report(spark, sf):
     values are pinned identical."""
     docs = _t(spark, sf, "documents")
     dec = dd.decontaminate(docs).select("doc_id", "n_overlap")
-    pairs = dd.minhash_lsh_pairs(docs)
+    pairs = dd.minhash_lsh_pairs(docs, **NEAR_DUP_LSH)
     lex = (
         pairs.select(F.col("id_a").alias("doc_id"))
         .union(pairs.select(F.col("id_b").alias("doc_id")))
@@ -4310,6 +4320,9 @@ def hourly_profiles(spark, sf):
         _t(spark, sf, "events")
         .groupBy("user_id", F.hour("ts").alias("h"))
         .agg(rhu(F.avg("value"), 6).alias("v"))
+        # map_from_entries throws on a NULL key (an event without ts):
+        # drop that group first (no extra shuffle)
+        .filter(F.col("h").isNotNull())
     )
     return (
         prof.groupBy("user_id")
@@ -15467,7 +15480,7 @@ def q_cluster_keep_best(spark, sf):
     keep decision is a per-cluster window.  Every stage shuffles on a
     key that exists at 100 TB (doc id / cluster id), never on text."""
     docs = _t(spark, sf, "documents")
-    clusters = dd.near_dup_clusters(docs)
+    clusters = dd.near_dup_clusters(docs, **NEAR_DUP_LSH)
     quality = ta.quality_features(docs).select("doc_id", "quality_score")
     w = Window.partitionBy("cluster_id").orderBy(
         F.col("quality_score").desc(), F.col("doc_id").asc()

@@ -36,25 +36,3 @@ def get_spark(app_name: str = "aprs2influxdb_spark", shuffle_partitions: int | N
     )
     return builder.getOrCreate()
 
-
-def create_views(spark: SparkSession, sf_dir: str, tables: list[str] | None = None) -> list[str]:
-    """Register the tables as temp views (normalized like
-    :func:`load_tables`) so the whole engine surface is reachable from
-    ``spark.sql`` — the SQL-first face of the DataFrame API.  Returns
-    the view names."""
-    frames = load_tables(spark, sf_dir, tables)
-    for name, df in frames.items():
-        df.createOrReplaceTempView(name)
-    return sorted(frames)
-
-
-def load_tables(spark: SparkSession, sf_dir: str, tables: list[str] | None = None) -> dict:
-    """Load the driver's parquet tables as DataFrames keyed by name,
-    with the same ``events.ts`` normalization the query layer uses."""
-    from aprs2influxdb_spark.queries import _t
-
-    names = tables or [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]
-    return {t: _t(spark, sf_dir, t) for t in names}

@@ -176,7 +176,14 @@ def influxdb_sink_broadcast_calibrated(
     space too large to broadcast (tens of millions of senders) or
     strict WITHIN-batch equation application; the reference's world
     (thousands of callsigns, per-batch granularity) sits far on this
-    side of it."""
+    side of it.
+
+    Nothing the plan needs is rebuilt per batch unless it changed: the
+    serializer's Columns are memoized per SparkContext (each batch
+    arrives in a new session wrapper, see ``functions.plancache``), and
+    the calibrator keeps its dim frame until an absorbed equation
+    differs from the stored one (``BroadcastCalibrator``).  Equations
+    still take effect from the next batch on."""
     from pyspark.sql import functions as F
 
     from aprs2influxdb_spark.streaming.calibration import BroadcastCalibrator

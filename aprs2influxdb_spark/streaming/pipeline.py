@@ -21,8 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from aprs2influxdb_spark.operators.projections import malformed_predicate, with_line
-from aprs2influxdb_spark.schema import OUTPUT_FORMATS, PACKET_SCHEMA
+from aprs2influxdb_spark.operators.projections import to_line_protocol
+from aprs2influxdb_spark.schema import PACKET_SCHEMA
 
 
 def stream_packets(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
@@ -38,19 +38,15 @@ def stream_packets(spark: SparkSession, path: str, fmt: str = "parquet") -> Data
 
 def stream_lines(packets: DataFrame, eqns_col: str | None = None) -> DataFrame:
     """Stateless pipeline: dispatch (D1/D2) + dead-letter filter (D3)
-    + per-format projection (P1-P9) -> ``line`` column.
+    + per-format projection (P1-P9) -> ``line`` column — the batch
+    serializer ``to_line_protocol`` itself, memoized expressions and
+    all.
 
     Calibration-aware scaling needs keyed state — chain
     ``streaming.calibration.with_streaming_calibration`` before this
     and pass its output column name as ``eqns_col``.
     """
-    eqns = F.col(eqns_col) if eqns_col else None
-    return with_line(
-        packets.filter(F.col("format").isin(OUTPUT_FORMATS)).filter(
-            ~malformed_predicate(eqns)
-        ),
-        eqns,
-    )
+    return to_line_protocol(packets, eqns_col)
 
 
 def packet_rates(packets: DataFrame, window: str = "1 minute", watermark: str = "5 minutes") -> DataFrame:

@@ -380,12 +380,14 @@ class TestEpochStatePersistence:
         q_incremental_contamination's in-plan rebuild exactly."""
         import subprocess
         import sys
+        from pathlib import Path
 
         from aprs2influxdb_spark.operators.epoch_state import (
             persist_contamination_state,
         )
         from aprs2influxdb_spark.queries import q_incremental_contamination
 
+        repo = str(Path(__file__).resolve().parents[1])
         state = str(tmp_path / "epoch0")
         out = str(tmp_path / "probe_result")
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -394,7 +396,7 @@ class TestEpochStatePersistence:
 
         probe_script = f"""
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, {repo!r})
 from pyspark.sql import functions as F
 from aprs2influxdb_spark.session import get_spark
 from aprs2influxdb_spark.functions.hashing import portable_hash64
@@ -410,7 +412,7 @@ spark.stop()
 """
         r = subprocess.run(
             [sys.executable, "-c", probe_script],
-            cwd="/root/repo", capture_output=True, text=True, timeout=420,
+            cwd=repo, capture_output=True, text=True, timeout=420,
         )
         assert r.returncode == 0, r.stderr[-3000:]
 

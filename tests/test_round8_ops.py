@@ -408,41 +408,76 @@ class TestBroadcastCalibration:
         got = json.loads(out2[0]["eqns_json"])
         assert got[0] == [0.0, 2.0, 0.0]  # a1 scales 2x from batch 2 on
 
-    def test_cli_broadcast_sink_end_to_end(self, spark, tmp_path):
-        """cli.py's default path: packet stream -> broadcast-dim
-        foreachBatch sink -> HTTP lines on a live stub.  Every data
-        frame must arrive; the EQNS frame must not."""
-        import sys
+        # the sender re-sends the same equations: the dim frame is kept
+        dim = calib._dim_df
+        out3 = calib.apply(self._packets(spark, [eqns, data]), 2).collect()
+        assert json.loads(out3[0]["eqns_json"])[0] == [0.0, 2.0, 0.0]
+        assert calib._dim_df is dim
 
-        sys.path.insert(0, "/root/repo/tools")
+        # changed equations: still the old ones within their own batch,
+        # then the dim frame is rebuilt and the new ones apply
+        eqns3 = eqns.replace("EQNS.0,2,0", "EQNS.0,3,0")
+        out4 = calib.apply(self._packets(spark, [eqns3, data]), 3).collect()
+        assert json.loads(out4[0]["eqns_json"])[0] == [0.0, 2.0, 0.0]
+        out5 = calib.apply(self._packets(spark, [data]), 4).collect()
+        assert json.loads(out5[0]["eqns_json"])[0] == [0.0, 3.0, 0.0]
+        assert calib._dim_df is not dim
+
+    def test_cli_broadcast_sink_end_to_end(self, spark, tmp_path, monkeypatch):
+        """cli.py's default path: packet stream -> broadcast-dim
+        foreachBatch sink -> HTTP lines on a live stub, over two
+        micro-batches.  The stub receives exactly the batch oracle's
+        lines: every data frame arrives, the EQNS frame does not, and
+        the equations arrive a batch before the telemetry they scale,
+        so next-batch application and the as-of oracle agree.
+        foreachBatch hands every micro-batch a new session wrapper; the
+        serializer's Columns are memoized per SparkContext, so
+        ``field_exprs`` is built once across the two batches."""
+        import datetime
+        import sys
+        from pathlib import Path
+
+        sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
         from soak import _StubState, start_influx_stub
 
-        from aprs2influxdb_spark.sinks.influxdb import (
-            influxdb_sink_broadcast_calibrated,
-        )
-
-        frames = [
-            "KB1AAA>APRS:=4217.22N/07148.38W-test 1",
-            "KB1AAA>APRS::KB1AAA   :EQNS.0,2,0,0,1,0,0,1,0,0,1,0,0,1,0",
-            "KB1AAA>APRS:T#005,100,2,3,4,5,10101010",
-            "KB1AAA>APRS:>status msg",
-        ]
-        src = tmp_path / "raw"
-        src.mkdir()
-        spark.createDataFrame(
-            [(f, None) for f in frames], "raw string, ingest_ts timestamp"
-        ).withColumn("ingest_ts", F.current_timestamp()).coalesce(1).write.parquet(
-            str(src / "b0")
-        )
-        raw = (
-            spark.readStream.schema("raw string, ingest_ts timestamp")
-            .parquet(str(src / "*"))
-        )
+        from aprs2influxdb_spark.functions import plancache
+        from aprs2influxdb_spark.operators import projections
+        from aprs2influxdb_spark.operators.calibration import with_effective_equations
+        from aprs2influxdb_spark.sinks.influxdb import influxdb_sink_broadcast_calibrated
         from aprs2influxdb_spark.sources.aprsis import decode_frames
 
-        state = _StubState()
+        batches = [
+            [
+                "KB1AAA>APRS:=4217.22N/07148.38W-test 1",
+                "KB1AAA>APRS::KB1AAA   :EQNS.0,2,0,0,1,0,0,1,0,0,1,0,0,1,0",
+                "KB1AAA>APRS:>status msg",
+            ],
+            [
+                "KB1AAA>APRS:T#005,100,2,3,4,5,10101010",
+                "KB1AAA>APRS:=4217.22N/07148.38W-test 2",
+            ],
+        ]
+        t0 = datetime.datetime(2026, 1, 1)
+        rows = [
+            [(f, t0 + datetime.timedelta(minutes=b, seconds=i)) for i, f in enumerate(frames)]
+            for b, frames in enumerate(batches)
+        ]
+        schema = "raw string, ingest_ts timestamp"
+
+        spark.sparkContext.__dict__.pop(plancache._COLUMN_ATTR, None)
+        built = []
+        real = projections.field_exprs
+        monkeypatch.setattr(
+            projections, "field_exprs", lambda *a: built.append(a) or real(*a)
+        )
+        src = tmp_path / "raw"
+        raw = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(
+            str(src / "*")
+        )
+        state = _StubState(keep_lines=True)
         srv, port = start_influx_stub(state)
         try:
+            spark.createDataFrame(rows[0], schema).coalesce(1).write.parquet(str(src / "b0"))
             q = influxdb_sink_broadcast_calibrated(
                 decode_frames(raw),
                 checkpoint=str(tmp_path / "ckpt"),
@@ -450,11 +485,29 @@ class TestBroadcastCalibration:
                 db="t",
             )
             q.processAllAvailable()
+            spark.createDataFrame(rows[1], schema).coalesce(1).write.parquet(str(src / "b1"))
+            q.processAllAvailable()
+            n_batches = sum(p.numInputRows > 0 for p in q.recentProgress)
             q.stop()
-            with state.lock:
-                assert state.lines == 3  # EQNS frame absorbed, 3 data lines
         finally:
             srv.shutdown()
+        assert n_batches == 2
+        assert len(built) == 1
+
+        want = [
+            r["line"]
+            for r in projections.to_line_protocol(
+                with_effective_equations(
+                    decode_frames(spark.createDataFrame(rows[0] + rows[1], schema))
+                ),
+                eqns_col="eqns_effective",
+            ).collect()
+        ]
+        with state.lock:
+            got = list(state.got)
+        assert len(got) == 4  # EQNS frame absorbed, 4 data lines
+        assert sorted(got) == sorted(want)
+        assert any("analog1=200.0" in ln for ln in got)  # batch 2 calibrated
 
 
 # ---------------------------------------------------------------------------

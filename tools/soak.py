@@ -39,10 +39,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 class _StubState:
-    def __init__(self) -> None:
+    def __init__(self, keep_lines: bool = False) -> None:
         self.lock = threading.Lock()
         self.lines = 0
         self.posts = 0
+        # the received lines themselves, for callers that compare them
+        self.got: list[str] | None = [] if keep_lines else None
 
 
 def start_influx_stub(state: _StubState) -> tuple[http.server.ThreadingHTTPServer, int]:
@@ -57,6 +59,8 @@ def start_influx_stub(state: _StubState) -> tuple[http.server.ThreadingHTTPServe
             with state.lock:
                 state.lines += body.count(b"\n") + (1 if body else 0)
                 state.posts += 1
+                if state.got is not None and body:
+                    state.got.extend(body.decode().split("\n"))
             self.send_response(204)
             self.end_headers()
 
