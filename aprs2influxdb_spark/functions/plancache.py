@@ -34,12 +34,14 @@ and need no invalidation.
 
 from __future__ import annotations
 
+import threading
 from typing import Callable, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 
 _CACHE_ATTR = "_aprs2_table_plan_cache"
 _COLUMN_ATTR = "_aprs2_column_memo"
+_COLUMN_LOCK = threading.Lock()
 
 T = TypeVar("T")
 
@@ -60,13 +62,17 @@ def table_plan(
 def column_memo(spark: SparkSession, key: tuple, build: Callable[[], T]) -> T:
     """Return the unresolved Column(s) ``build()`` made for ``key`` in
     this SparkContext, building them on first use.  ``build`` may
-    return one Column or any structure of them.  Two threads that miss
-    at once (a stream's batch thread and a driver thread) both build,
-    and both get the first result stored."""
+    return one Column or any structure of them.  Builds run one at a
+    time: a thread that misses while another builds (a stream's batch
+    thread and a driver thread) waits for that build instead of
+    repeating its py4j calls beside it."""
     cache = spark.sparkContext.__dict__.setdefault(_COLUMN_ATTR, {})
     cols = cache.get(key)
     if cols is None:
-        cols = cache.setdefault(key, build())
+        with _COLUMN_LOCK:
+            cols = cache.get(key)
+            if cols is None:
+                cols = cache[key] = build()
     return cols
 
 

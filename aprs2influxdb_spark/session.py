@@ -10,8 +10,13 @@ so any Pandas-UDF path (multimodal decode, streaming state) is batched.
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
+
+# the directory holding the package: Python workers import it from here
+# whatever the working directory
+_PACKAGE_PARENT = str(Path(__file__).resolve().parents[1])
 
 
 def get_spark(app_name: str = "aprs2influxdb_spark", shuffle_partitions: int | None = None) -> SparkSession:
@@ -34,5 +39,14 @@ def get_spark(app_name: str = "aprs2influxdb_spark", shuffle_partitions: int | N
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    # the environment every Python function hands its workers, as the
+    # context built it from spark.executorEnv.* (spark-defaults.conf
+    # included): the package's parent goes first, a deployment's
+    # PYTHONPATH stays after it (and, in local mode, the driver's own)
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _PACKAGE_PARENT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join([_PACKAGE_PARENT, *paths])
+    return spark
 

@@ -4,10 +4,16 @@ Reference behavior: one HTTP POST *and one new InfluxDBClient* per
 packet, at-most-once, no retry (:1047-1085 — the biggest structural
 throughput defect, SURVEY §4 "Anti-batching").  Engine behavior:
 
-- ``foreachBatch`` sink: per micro-batch, each executor partition
-  POSTs its lines in chunks of ``batch_size`` over ONE reused HTTP
-  connection — write amplification drops from 1 request/point to
-  1 request/5000 points;
+- ``foreachBatch`` sink: per micro-batch, ONE Spark job in which each
+  executor partition POSTs its lines in chunks of ``batch_size``
+  (:func:`write_partitions`) — write amplification drops from
+  1 request/point to 1 request/5000 points; the lines written are
+  summed per batch and logged at DEBUG on the ``aprs2influxdb_spark``
+  logger;
+- the broadcast-calibrated sink (the cli.py default) calibrates,
+  renders and writes in that same job, which also brings the batch's
+  equation rows back to the driver: no persist, no second pass over
+  the batch, no shuffle;
 - bounded exponential-backoff retry -> effectively-once into InfluxDB
   (idempotent: line protocol upserts on identical timestamp+tagset);
 - parity mode (``url=None``): lines append to a text dir instead, so
@@ -25,6 +31,8 @@ import urllib.parse
 import urllib.request
 
 from pyspark.sql import DataFrame
+
+_LOG = logging.getLogger("aprs2influxdb_spark")
 
 
 def write_lines_http(
@@ -87,6 +95,33 @@ def write_lines_http(
     return written
 
 
+def write_partitions(
+    df: DataFrame, url: str, db: str, batch_size: int = 5000,
+    user: str | None = None, password: str | None = None,
+) -> tuple[int, list]:
+    """One Spark job over ``df``: every partition POSTs the non-null
+    values of ``df``'s first column (``write_lines_http``) and hands
+    back the non-null values of its second column, if it has one.
+    Returns (lines written, those values); the driver never sees the
+    lines."""
+
+    def _part(rows):
+        lines, back = [], []
+        for r in rows:
+            if r[0] is not None:
+                lines.append(r[0])
+            if len(r) > 1 and r[1] is not None:
+                back.append(r[1])
+        n = write_lines_http(lines, url, db, batch_size, user=user, password=password) if lines else 0
+        yield n, back
+
+    written, back = 0, []
+    for n, part in df.rdd.mapPartitions(_part).collect():
+        written += n
+        back += part
+    return written, back
+
+
 def influxdb_sink(
     lines_df: DataFrame, checkpoint: str, url: str | None = None,
     db: str = "mydb", line_col: str = "line", batch_size: int = 5000,
@@ -139,14 +174,10 @@ def influxdb_sink(
         return writer.start()
 
     def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        def _part(rows):
-            buf = [r[0] for r in rows]
-            if buf:
-                write_lines_http(buf, url, db, batch_size, user=user, password=password)
-            return iter(())
-
-        # executor-side partition writes: the driver never collects
-        batch_df.select(line_col).rdd.mapPartitions(_part).count()
+        written, _ = write_partitions(
+            batch_df.select(line_col), url, db, batch_size, user, password
+        )
+        _LOG.debug("batch %d: %d lines written", batch_id, written)
 
     writer = lines_df.writeStream.foreachBatch(_write_batch).option(
         "checkpointLocation", checkpoint
@@ -178,40 +209,28 @@ def influxdb_sink_broadcast_calibrated(
     (thousands of callsigns, per-batch granularity) sits far on this
     side of it.
 
-    Nothing the plan needs is rebuilt per batch unless it changed: the
-    serializer's Columns are memoized per SparkContext (each batch
-    arrives in a new session wrapper, see ``functions.plancache``), and
-    the calibrator keeps its dim frame until an absorbed equation
-    differs from the stored one (``BroadcastCalibrator``).  Equations
-    still take effect from the next batch on."""
-    from pyspark.sql import functions as F
-
+    One pass per batch: the un-persisted batch is joined to the dim
+    (whose equations are parsed already), projected once to ``line``
+    and the equation rows (``BroadcastCalibrator.lines``), and written
+    by one partition function that POSTs the lines and returns the
+    equation rows; after that job succeeds the driver folds them into
+    the dim (``BroadcastCalibrator.fold``).  Two Spark jobs per data
+    batch: the dim's broadcast and the write.  Nothing the plan needs
+    is rebuilt per batch unless it changed: the serializer's Columns
+    are memoized per SparkContext (each batch arrives in a new session
+    wrapper, see ``functions.plancache``), and the calibrator keeps its
+    dim frame until an absorbed equation differs from the stored one.
+    Equations still take effect from the next batch on."""
     from aprs2influxdb_spark.streaming.calibration import BroadcastCalibrator
-    from aprs2influxdb_spark.streaming.pipeline import stream_lines
 
     calib = BroadcastCalibrator(packets_df.sparkSession)
 
     def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # two actions consume the batch (dim refresh + write): persist
-        # so the source is scanned once per batch
-        batch_df.persist()
-        try:
-            cal = calib.apply(batch_df, batch_id).withColumn(
-                "eqns_effective", F.from_json("eqns_json", "array<array<double>>")
-            )
-            out = stream_lines(cal, eqns_col="eqns_effective")
-
-            def _part(rows):
-                buf = [r[0] for r in rows]
-                if buf:
-                    write_lines_http(
-                        buf, url, db, batch_size, user=user, password=password
-                    )
-                return iter(())
-
-            out.select("line").rdd.mapPartitions(_part).count()
-        finally:
-            batch_df.unpersist()
+        written, eqns = write_partitions(
+            calib.lines(batch_df), url, db, batch_size, user, password
+        )
+        calib.fold(eqns)
+        _LOG.debug("batch %d: %d lines written", batch_id, written)
 
     writer = packets_df.writeStream.foreachBatch(_write_batch).option(
         "checkpointLocation", checkpoint

@@ -161,58 +161,119 @@ class BroadcastCalibrator:
     as-of order).  Within-batch application would need the keyed
     operators above; across batches all three strategies agree.
 
+    One join, one fold: :meth:`lines` (the sink's single pass) and
+    :meth:`apply` (the calibrated rows as a frame) both left-broadcast-
+    join the batch to the dim, and both hand the batch's equation rows
+    to :meth:`fold`, which compacts them on the driver.  The sink folds
+    only after its write job succeeded, so a failed batch leaves the
+    dim as it was for the replay.
+
     Dim reuse: the dim's Spark frame is kept across batches and rebuilt
     only before the first batch that follows an absorbed equation that
     differs from the stored one.  So the reuse pays only after batches
     with no new or changed EQNS; a batch carrying a sender's first or a
-    changed EQNS costs a rebuild before the next batch.  The frame is
-    built from pandas: the rows cross to the JVM through Arrow as a
-    local relation, where a Python list is pickled into an RDD (9k rows,
-    4 cores, warm: a broadcast join against it takes 0.31-0.35 s
-    against 0.70-0.74 s).
+    changed EQNS costs a rebuild before the next batch.  The frame
+    carries the equations both as ``eqns_json`` and already parsed as
+    ``eqns_effective``, so no batch parses JSON.  The rows cross to the
+    JVM from pandas through Arrow instead of being pickled from a
+    Python list (9k rows, 4 cores, warm: a broadcast join against it
+    takes 0.31-0.35 s against 0.70-0.74 s).  Spark's ``from_json``
+    parses them once per rebuild: it reads back the ``"NaN"`` and
+    ``"Infinity"`` that ``to_json`` writes for non-finite coefficients,
+    which Python's ``json`` and Arrow's pandas conversion (NaN -> null)
+    would not.
 
     Scale boundary: the dim must stay broadcast-sized (O(#keys) — at
     ~9k keys it is ~1 MB).  A key space that outgrows broadcast is
     exactly when the keyed-state strategies win; tools/soak.py
     measures the crossover's other side."""
 
+    EQNS_COL = "eqns_effective"
+
     def __init__(self, spark) -> None:
         self._spark = spark
         self._dim: dict[str, str] = {}
         self._dim_df: DataFrame | None = None  # None: stale, rebuild on use
 
-    def apply(self, batch_df: DataFrame, batch_id: int = 0) -> DataFrame:
+    def _joined(self, batch_df: DataFrame) -> DataFrame:
+        """``batch_df`` left-joined to the dim as of batch start
+        (broadcast), adding ``eqns_json`` and ``eqns_effective``."""
         from pyspark.sql import functions as F
 
-        # 1. data rows join the dim as of batch start (broadcast)
         if self._dim_df is None:
-            self._dim_df = self._spark.createDataFrame(
-                pd.DataFrame(list(self._dim.items()), columns=["from_call", "eqns_json"]),
+            dim = self._spark.createDataFrame(
+                pd.DataFrame({"from_call": list(self._dim), "eqns_json": list(self._dim.values())}),
                 "from_call string, eqns_json string",
+            ).withColumn(self.EQNS_COL, F.from_json("eqns_json", "array<array<double>>"))
+            # parsed here, once: kept as a local relation of the parsed
+            # rows, so the optimizer of each batch does not re-parse them
+            jdf = dim._jdf
+            self._dim_df = DataFrame(
+                self._spark._jsparkSession.createDataFrame(jdf.collectAsList(), jdf.schema()),
+                self._spark,
             )
-        out = (
-            batch_df.filter(F.col("format") != "telemetry-message")
-            .join(F.broadcast(self._dim_df), "from_call", "left")
-            .select(*_OUT_COLS)
+        return batch_df.join(F.broadcast(self._dim_df), "from_call", "left")
+
+    @staticmethod
+    def _eqns_row() -> tuple:
+        """(predicate, value) of the rows :meth:`fold` takes: a
+        telemetry-message carrying equations, as (from_call, ingest_ts
+        in µs, raw, ``to_json(tEQNS)``)."""
+        from pyspark.sql import functions as F
+
+        return (
+            (F.col("format") == "telemetry-message") & F.col("tEQNS").isNotNull(),
+            F.struct(
+                "from_call",
+                F.unix_micros("ingest_ts").alias("ts"),
+                "raw",
+                F.to_json("tEQNS").alias("eqns_json"),
+            ),
         )
-        # 2. refresh the dim from the batch's equation rows: tiny
-        # (O(#senders with new equations)), compacted by the same
-        # (ingest_ts, raw) as-of order the batch window uses
-        upd = (
-            batch_df.filter(
-                (F.col("format") == "telemetry-message") & F.col("tEQNS").isNotNull()
-            )
-            .groupBy("from_call")
-            .agg(
-                F.max_by(
-                    F.to_json("tEQNS"), F.struct("ingest_ts", "raw")
-                ).alias("eqns_json")
-            )
-            .collect()
+
+    def lines(self, batch_df: DataFrame) -> DataFrame:
+        """The sink's one projection over the joined batch: ``line``,
+        the serializer's output (``projections._serializer``, the same
+        memoized Columns ``to_line_protocol`` uses), null where nothing
+        is written (unknown format, telemetry-message, malformed); and
+        ``eqns``, the :meth:`fold` row of each equation row, else null."""
+        from pyspark.sql import functions as F
+
+        from aprs2influxdb_spark.operators.projections import _serializer
+
+        _, well_formed, fields, _, line = _serializer(self._spark, self.EQNS_COL)
+        is_eqns, eqns = self._eqns_row()
+        return self._joined(batch_df).select("*", *fields).select(
+            F.when(well_formed, line).alias("line"),
+            F.when(is_eqns, eqns).alias("eqns"),
         )
-        for r in upd:
-            eqns_json = r["eqns_json"]
-            if eqns_json not in (None, "[]") and self._dim.get(r["from_call"]) != eqns_json:
-                self._dim[r["from_call"]] = eqns_json
+
+    def fold(self, rows) -> None:
+        """Absorb equation rows (from_call, ts, raw, eqns_json) into the
+        dim: per sender the last by (ts, raw) wins — the batch window's
+        as-of order, nulls first as in Spark's ordering — and a winner
+        without equations (None, ``"[]"``) changes nothing.  The dim
+        frame goes stale only when a stored equation really changes."""
+        last: dict[str, tuple] = {}
+        for call, ts, raw, eqns_json in rows:
+            key = (ts is not None, ts or 0, raw is not None, raw or "")
+            if call not in last or key > last[call][0]:
+                last[call] = (key, eqns_json)
+        for call, (_, eqns_json) in last.items():
+            if eqns_json not in (None, "[]") and self._dim.get(call) != eqns_json:
+                self._dim[call] = eqns_json
                 self._dim_df = None
+
+    def apply(self, batch_df: DataFrame, batch_id: int = 0) -> DataFrame:
+        """The batch's data rows with the equations in effect at batch
+        start as ``eqns_json`` (packet schema + ``eqns_json``); the
+        batch's equation rows are folded into the dim (one collect of
+        just those rows), so they apply from the next batch on."""
+        from pyspark.sql import functions as F
+
+        out = self._joined(
+            batch_df.filter(F.col("format") != "telemetry-message")
+        ).select(*_OUT_COLS)
+        is_eqns, eqns = self._eqns_row()
+        self.fold(r[0] for r in batch_df.filter(is_eqns).select(eqns).collect())
         return out

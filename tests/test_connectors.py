@@ -333,6 +333,50 @@ class TestInfluxSink:
         assert got == exp
 
 
+class TestSession:
+    def test_workers_import_package_from_any_cwd(self, tmp_path):
+        """A driver started outside the repository, with the package on
+        its own ``sys.path`` only (no install, no PYTHONPATH), still
+        runs Python workers that import the package: ``decode_frames``
+        unpickles its ``mapInPandas`` function there.  A PYTHONPATH the
+        deployment gives the workers (``spark.executorEnv.PYTHONPATH``
+        in spark-defaults.conf) still reaches them."""
+        import os
+        import subprocess
+        import sys
+        from pathlib import Path
+
+        repo = str(Path(__file__).resolve().parents[1])
+        site = tmp_path / "site"
+        site.mkdir()
+        (site / "deployed_mod.py").write_text("VALUE = 7\n")
+        conf = tmp_path / "conf"
+        conf.mkdir()
+        (conf / "spark-defaults.conf").write_text(f"spark.executorEnv.PYTHONPATH {site}\n")
+        script = f"""
+import sys
+sys.path.insert(0, {repo!r})
+from aprs2influxdb_spark.session import get_spark
+from aprs2influxdb_spark.sources.aprsis import decode_frames
+
+spark = get_spark("cwd-probe")
+raw = spark.createDataFrame([({FRAMES[0]!r}, None)], "raw string, ingest_ts timestamp")
+print("rows", decode_frames(raw).count())
+rdd = spark.sparkContext.parallelize([0], 1)
+print("deployed", rdd.map(lambda _: __import__("deployed_mod").VALUE).collect())
+spark.stop()
+"""
+        env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+        env["SPARK_CONF_DIR"] = str(conf)
+        r = subprocess.run(
+            [sys.executable, "-c", script],
+            cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+        )
+        assert r.returncode == 0, r.stderr[-3000:]
+        assert "rows 1" in r.stdout
+        assert "deployed [7]" in r.stdout
+
+
 class TestCliDaemon:
     def test_parser_matches_reference_defaults(self):
         from aprs2influxdb_spark.cli import build_parser

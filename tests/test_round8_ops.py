@@ -423,6 +423,150 @@ class TestBroadcastCalibration:
         assert json.loads(out5[0]["eqns_json"])[0] == [0.0, 3.0, 0.0]
         assert calib._dim_df is not dim
 
+    @pytest.mark.parametrize("path", ["apply", "sink"])
+    def test_fold_last_write_wins(self, spark, path):
+        """Two EQNS frames from one sender in one batch: the later
+        ``ingest_ts`` wins, and on a tie the larger ``raw`` (the
+        ``max_by(..., struct(ingest_ts, raw))`` order of the batch
+        window), wherever the frames sit in the batch.  An unchanged
+        re-send keeps the dim frame; a changed one applies from the
+        next batch.  Both the sink's pass (``lines`` + ``fold``) and
+        ``apply`` go through the same fold."""
+        import datetime
+
+        from aprs2influxdb_spark.sources.aprsis import decode_frames
+        from aprs2influxdb_spark.streaming.calibration import BroadcastCalibrator
+
+        t0 = datetime.datetime(2026, 1, 1)
+        data = "KB1AAA>APRS:T#005,100,2,3,4,5,10101010"
+        calib = BroadcastCalibrator(spark)
+
+        def eqns(b):
+            return f"KB1AAA>APRS::KB1AAA   :EQNS.0,{b},0,0,1,0,0,1,0,0,1,0,0,1,0"
+
+        def batch(*frames):
+            """The analog1 scale the batch's data frame was written with."""
+            df = decode_frames(spark.createDataFrame(
+                [(f, t0 + datetime.timedelta(seconds=s)) for f, s in frames],
+                "raw string, ingest_ts timestamp",
+            ))
+            if path == "apply":
+                (row,) = calib.apply(df).collect()
+                return json.loads(row["eqns_json"])[0][1] if row["eqns_json"] else 1.0
+            rows = calib.lines(df).collect()
+            calib.fold(r["eqns"] for r in rows if r["eqns"] is not None)
+            (line,) = [r["line"] for r in rows if r["line"] is not None]
+            return float(line.split("analog1=")[1].split(",")[0]) / 100
+
+        # later ingest_ts wins over the larger raw listed last
+        assert batch((data, 0), (eqns(2), 2), (eqns(3), 1)) == 1.0
+        # a tie on ingest_ts: the larger raw wins, though listed first
+        assert batch((eqns(4), 11), (eqns(3), 11), (data, 10)) == 2.0
+        assert batch((data, 20),) == 4.0
+        dim = calib._dim_df
+        # an unchanged re-send keeps the dim frame
+        assert batch((data, 30), (eqns(4), 31)) == 4.0
+        assert calib._dim_df is dim
+        # a changed one applies from the next batch, on a rebuilt frame
+        assert batch((eqns(6), 40), (data, 41)) == 4.0
+        assert batch((data, 50),) == 6.0
+        assert calib._dim_df is not dim
+
+    @pytest.mark.parametrize("path", ["apply", "sink"])
+    def test_non_finite_equations_match_batch_oracle(self, spark, path):
+        """Coefficients the parser reads as non-finite (``nan``,
+        ``1e999``, ``-inf``) reach the next batch's lines as the batch
+        oracle writes them, through the sink's pass (``lines`` +
+        ``fold``) and through ``apply``: ``to_json`` renders them as the
+        strings ``"NaN"``/``"Infinity"``, which the dim must read back
+        as doubles, and a later batch must still run."""
+        import datetime
+
+        from aprs2influxdb_spark.operators.calibration import with_effective_equations
+        from aprs2influxdb_spark.operators.projections import to_line_protocol
+        from aprs2influxdb_spark.sources.aprsis import decode_frames
+        from aprs2influxdb_spark.streaming.calibration import BroadcastCalibrator
+        from aprs2influxdb_spark.streaming.pipeline import stream_lines
+
+        t0 = datetime.datetime(2026, 1, 1)
+        schema = "raw string, ingest_ts timestamp"
+        eqns = "KB1AAA>APRS::KB1AAA   :EQNS.nan,1,0,0,1e999,0,0,1,-inf,0,1,0,0,1,0"
+        batches = [
+            [(eqns, t0)],
+            [("KB1AAA>APRS:T#005,100,2,3,4,5,10101010", t0 + datetime.timedelta(seconds=1))],
+            [("KB1AAA>APRS:T#006,100,2,3,4,5,10101010", t0 + datetime.timedelta(seconds=2))],
+        ]
+        calib = BroadcastCalibrator(spark)
+        got = []
+        for rows in batches:
+            df = decode_frames(spark.createDataFrame(rows, schema))
+            if path == "apply":
+                cal = calib.apply(df).withColumn(
+                    "eqns_effective", F.from_json("eqns_json", "array<array<double>>")
+                )
+                got += [r["line"] for r in stream_lines(cal, eqns_col="eqns_effective").collect()]
+            else:
+                out = calib.lines(df).collect()
+                calib.fold(r["eqns"] for r in out if r["eqns"] is not None)
+                got += [r["line"] for r in out if r["line"] is not None]
+
+        want = [
+            r["line"]
+            for r in to_line_protocol(
+                with_effective_equations(
+                    decode_frames(spark.createDataFrame(sum(batches, []), schema))
+                ),
+                eqns_col="eqns_effective",
+            ).collect()
+        ]
+        assert len(got) == 2
+        assert sorted(got) == sorted(want)
+        assert "analog2=Infinity" in got[0] and "analog3=-Infinity" in got[0], got[0]
+
+    def _run_sink(self, spark, tmp_path, rows, schema):
+        """Drive ``influxdb_sink_broadcast_calibrated`` over ``rows``
+        (one parquet file, so one micro-batch, per entry) into a live
+        stub.  Returns the stub's lines and the Spark jobs each
+        micro-batch ran (the query's jobs run in its ``runId`` group)."""
+        import sys
+        from pathlib import Path
+
+        sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
+        from soak import _StubState, start_influx_stub
+
+        from aprs2influxdb_spark.sinks.influxdb import influxdb_sink_broadcast_calibrated
+        from aprs2influxdb_spark.sources.aprsis import decode_frames
+
+        src = tmp_path / "raw"
+        raw = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(
+            str(src / "*")
+        )
+        tracker = spark.sparkContext.statusTracker()
+        state = _StubState(keep_lines=True)
+        srv, port = start_influx_stub(state)
+        q, seen, jobs = None, set(), []
+        try:
+            for b, batch in enumerate(rows):
+                spark.createDataFrame(batch, schema).coalesce(1).write.parquet(str(src / f"b{b}"))
+                if q is None:
+                    q = influxdb_sink_broadcast_calibrated(
+                        decode_frames(raw),
+                        checkpoint=str(tmp_path / "ckpt"),
+                        url=f"http://127.0.0.1:{port}",
+                        db="t",
+                    )
+                q.processAllAvailable()
+                done = set(tracker.getJobIdsForGroup(q.runId))
+                jobs.append(len(done - seen))
+                seen = done
+            n_batches = sum(p.numInputRows > 0 for p in q.recentProgress)
+            q.stop()
+        finally:
+            srv.shutdown()
+        assert n_batches == len(rows)
+        with state.lock:
+            return list(state.got), jobs
+
     def test_cli_broadcast_sink_end_to_end(self, spark, tmp_path, monkeypatch):
         """cli.py's default path: packet stream -> broadcast-dim
         foreachBatch sink -> HTTP lines on a live stub, over two
@@ -434,16 +578,10 @@ class TestBroadcastCalibration:
         serializer's Columns are memoized per SparkContext, so
         ``field_exprs`` is built once across the two batches."""
         import datetime
-        import sys
-        from pathlib import Path
-
-        sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
-        from soak import _StubState, start_influx_stub
 
         from aprs2influxdb_spark.functions import plancache
         from aprs2influxdb_spark.operators import projections
         from aprs2influxdb_spark.operators.calibration import with_effective_equations
-        from aprs2influxdb_spark.sinks.influxdb import influxdb_sink_broadcast_calibrated
         from aprs2influxdb_spark.sources.aprsis import decode_frames
 
         batches = [
@@ -470,28 +608,7 @@ class TestBroadcastCalibration:
         monkeypatch.setattr(
             projections, "field_exprs", lambda *a: built.append(a) or real(*a)
         )
-        src = tmp_path / "raw"
-        raw = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(
-            str(src / "*")
-        )
-        state = _StubState(keep_lines=True)
-        srv, port = start_influx_stub(state)
-        try:
-            spark.createDataFrame(rows[0], schema).coalesce(1).write.parquet(str(src / "b0"))
-            q = influxdb_sink_broadcast_calibrated(
-                decode_frames(raw),
-                checkpoint=str(tmp_path / "ckpt"),
-                url=f"http://127.0.0.1:{port}",
-                db="t",
-            )
-            q.processAllAvailable()
-            spark.createDataFrame(rows[1], schema).coalesce(1).write.parquet(str(src / "b1"))
-            q.processAllAvailable()
-            n_batches = sum(p.numInputRows > 0 for p in q.recentProgress)
-            q.stop()
-        finally:
-            srv.shutdown()
-        assert n_batches == 2
+        got, _ = self._run_sink(spark, tmp_path, rows, schema)
         assert len(built) == 1
 
         want = [
@@ -503,11 +620,75 @@ class TestBroadcastCalibration:
                 eqns_col="eqns_effective",
             ).collect()
         ]
-        with state.lock:
-            got = list(state.got)
         assert len(got) == 4  # EQNS frame absorbed, 4 data lines
         assert sorted(got) == sorted(want)
         assert any("analog1=200.0" in ln for ln in got)  # batch 2 calibrated
+
+    def test_broadcast_sink_one_pass_per_batch(self, spark, tmp_path, caplog):
+        """Each data micro-batch is one pass over the batch: the dim's
+        broadcast and the write, two Spark jobs, with the batch neither
+        persisted nor shuffled for the equation rows.  The second batch
+        follows a changed dim, the third an unchanged one.  Each batch
+        logs the lines its partitions wrote."""
+        import datetime
+        import logging
+
+        t0 = datetime.datetime(2026, 1, 1)
+        frames = [
+            ["KB1AAA>APRS::KB1AAA   :EQNS.0,2,0,0,1,0,0,1,0,0,1,0,0,1,0",
+             "KB1AAA>APRS:>status msg"],
+            ["KB1AAA>APRS:T#005,100,2,3,4,5,10101010"],
+            ["KB1AAA>APRS:T#006,100,2,3,4,5,10101010"],
+        ]
+        rows = [
+            [(f, t0 + datetime.timedelta(minutes=b, seconds=i)) for i, f in enumerate(fs)]
+            for b, fs in enumerate(frames)
+        ]
+        with caplog.at_level(logging.DEBUG, logger="aprs2influxdb_spark"):
+            got, jobs = self._run_sink(spark, tmp_path, rows, "raw string, ingest_ts timestamp")
+        assert len(got) == 3
+        assert jobs == [2, 2, 2]
+        written = [
+            r.getMessage() for r in caplog.records if "lines written" in r.getMessage()
+        ]
+        assert written == [f"batch {b}: 1 lines written" for b in range(3)]
+
+
+def test_column_memo_builds_once_under_concurrent_misses():
+    """Threads that miss the same ``column_memo`` key at once (a stream's
+    batch thread and a driver thread) run one build between them and
+    all get its result."""
+    import sys
+    import threading
+    import time
+    import types
+
+    from aprs2influxdb_spark.functions.plancache import column_memo
+
+    spark = types.SimpleNamespace(sparkContext=types.SimpleNamespace())
+    builds, got = [], []
+
+    def build():
+        builds.append(1)
+        time.sleep(0.05)
+        return object()
+
+    threads = [
+        threading.Thread(target=lambda: got.append(column_memo(spark, ("k",), build)))
+        for _ in range(16)
+    ]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=30)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert len(builds) == 1
+    assert len(got) == 16 and all(g is got[0] for g in got)
 
 
 # ---------------------------------------------------------------------------

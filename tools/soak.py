@@ -175,7 +175,7 @@ def run_soak_gate(n_frames: int, n_files: int, strategy: str = "apws") -> dict:
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
     from aprs2influxdb_spark.session import get_spark
-    from aprs2influxdb_spark.sinks.influxdb import write_lines_http
+    from aprs2influxdb_spark.sinks.influxdb import write_partitions
     from aprs2influxdb_spark.sources.aprsis import decode_frames
     from aprs2influxdb_spark.streaming.bounded import (
         GroupStateTimeout,
@@ -237,15 +237,6 @@ def run_soak_gate(n_frames: int, n_files: int, strategy: str = "apws") -> dict:
             .load(post)
         )
 
-        def _post_lines(lines_df):
-            def _part(rows):
-                buf = [r[0] for r in rows]
-                if buf:
-                    write_lines_http(buf, url, "soak", 5000)
-                return iter(())
-
-            lines_df.rdd.mapPartitions(_part).count()
-
         def _sink_verdict(verdict):
             """verdict: (doc_id, raw, anchor) — count, drop, ship."""
             n_all, n_dup = verdict.agg(
@@ -256,7 +247,9 @@ def run_soak_gate(n_frames: int, n_files: int, strategy: str = "apws") -> dict:
             survivors = verdict.filter(F.col("anchor").isNull()).select(
                 "raw", F.current_timestamp().alias("ingest_ts")
             )
-            _post_lines(stream_lines(decode_frames(survivors)).select("line"))
+            write_partitions(
+                stream_lines(decode_frames(survivors)).select("line"), url, "soak"
+            )
 
         if strategy == "apws":
             banded = probe_gate_index(_gate_banded(src), index)
