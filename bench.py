@@ -1,6 +1,13 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
-ONE JSON line {"metric", "value", "unit", "queries", "sf"}.
+"""Benchmark harness: times registry entries at $SPARK_GRAFT_SF_DIR
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+
+    python bench.py        # the HEADLINE list; writes BENCH.json
+    SPARK_GRAFT_BENCH_ONLY=winnowing,market_share python bench.py
+
+``SPARK_GRAFT_BENCH_ONLY`` takes a comma list of any registry names, run
+in the order given; an unknown name exits non-zero.  A subset run prints
+its body and writes nothing: only the full headline run owns
+BENCH.json.  A scale ladder is this script run once per scale directory.
 
 Each query executes to a ``noop``-format write: that forces the FULL
 plan — a ``count()`` action lets Catalyst prune every projection above
@@ -9,55 +16,10 @@ would "run" in scan-count time without computing their result columns.
 
 Per query the best of 2 consecutive runs is reported: single cold runs
 at this scale have ±30% scheduler/GC noise, which would drown real
-round-over-round regressions.  Queries cover every operator family:
-scan+agg, multi-join, window, as-of, dedup ladder, similarity (exact +
-ANN), text analysis, serialization.
-
-NOTE on round-over-round totals: the HEADLINE list GROWS each round
-(33 queries in r1 -> 46 in r2), so the summed total is NOT comparable
-across rounds — compare per-query times.  Known intentional r2 cost:
-ngram_jaccard/edit_distance_pairs now run the df-capped candidate
-stage by default (the only 100 TB-safe shape; ~+1 s at sf0.1 vs the
-uncapped baseline they previously benched with).
-
-Round-3 session-pressure attribution (judge item 6): rerunning the
-r1 33-query subset alone in a fresh quiet session
-(SPARK_GRAFT_BENCH_ONLY=first:33) measured 23.8 s vs r1's 21.7 s
-(+9.9%) and r2's in-session 24.0 s.  Per query: the r2 regressions
-flagged as suspicious were session pressure, not plan changes —
-gap_fill 0.88 -> 0.72 (r1 0.66), dedup_exact 0.28 -> 0.23 (r1 0.21)
-in the fresh run with unchanged plans; cosine_near_dup returned to
-0.83 (r1 0.75) after the corpus-count memoization removed its extra
-job.  The only real residual deltas vs r1 are ngram_jaccard +0.8 s
-(the intentional df-cap default) and first-position variance on
-region_revenue/pricing_summary (the first big-join queries timed
-after warmup; rank-stable across sessions).
-
-Round-4 attribution of the four unexplained r3 deltas
-(dup_ngram_coverage +49%, tfidf_top_terms +31%, ts_dtw_topk +26%,
-semantic_dedup +21%, judge item 3): NOT a code regression.  A
-controlled same-day A/B — the r2-tagged code (5fddf36) in a worktree
-vs HEAD, each run 3x per query in one warm session with build
-(driver-side plan construction) and exec timed separately — shows
-per-query parity within noise (steady-state build+exec, r2 vs r4:
-dup_ngram 0.41+0.93 vs 0.40+0.93; tfidf 0.18+0.88 vs 0.21+0.82;
-ts_dtw 0.86+0.72 vs 0.88+0.70; semantic_dedup 1.20+0.35 vs
-1.15+0.40 s).  Full-bench totals on the same 60-query list swung
-52.8 <-> 67.3 s across sessions with IDENTICAL code as host load
-moved between ~5 and ~10 loadavg; under settled load HEAD matches
-the r2 code (53.5 vs 52.8 s).  Two structural notes that make these
-four especially noise-prone: (a) their cost is dominated by the
-driver-side py4j build phase (semantic_dedup ~1.2 s build vs 0.35 s
-exec), which contends with anything else on the host CPU, and (b)
-best-of-2 does not cancel that, since both runs share the session's
-load window.
-
-Known intentional r3 cost: rp_rerank_topk ~1.1 -> ~2.4 s — the
-judge-requested out_dim 16 -> 32 lift (recall@10 0.84 -> 0.96);
-stage 1 does 2x the projection arithmetic and the 32-chain select
-compiles outside whole-stage codegen (split-method UnsafeProjection;
-measured equal to the checkpoint-barrier alternative, which would
-add a full corpus materialization at scale).
+round-over-round regressions.  Each run times ``builder()`` (driver-side
+plan construction, including any job a builder runs before it returns)
+apart from the write; ``"queries"`` holds the best run's total and
+``"build"`` that run's builder share.
 
 Leftover ``localCheckpoint`` blocks from PRIOR queries are unpersisted
 before each timed run (measured: they inflate later queries up to 2×
@@ -71,8 +33,10 @@ from __future__ import annotations
 
 import json
 import os
+import sys
 import time
 
+from aprs2influxdb_spark import media_store as ms
 from aprs2influxdb_spark.queries import registry
 from aprs2influxdb_spark.session import get_spark
 
@@ -324,108 +288,97 @@ def _drop_leftover_blocks(spark) -> None:
         rdd.unpersist()
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+def run(spark, sf_dir: str, names: list[str]) -> dict:
+    """Time ``names`` at ``sf_dir`` in ``spark`` and return the bench
+    body; an unknown name exits before any Spark work."""
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
-    spark = get_spark("bench")
-    spark.sparkContext.setLogLevel("ERROR")
     reg = registry()
-    # subset hook for session-pressure attribution experiments (e.g.
-    # "rerun the round-1 queries alone in a fresh session"): a
-    # comma-list of headline names, or "first:N"
-    only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
-    headline = HEADLINE
-    if only:
-        if only.startswith("first:"):
-            headline = HEADLINE[: int(only.split(":", 1)[1])]
-        else:
-            wanted = {s.strip() for s in only.split(",")}
-            headline = [n for n in HEADLINE if n in wanted]
+    unknown = [n for n in names if n not in reg]
+    if unknown:
+        sys.exit(f"bench: unknown registry entries: {', '.join(unknown)}")
 
     # JVM/codegen warmup on the smallest SF so steady-state throughput
     # is measured, not first-query compilation
-    warm = "/root/testdata/sf0.001"
     for name in ("pricing_summary", "cosine_topk"):
-        _run(reg[name][0](spark, warm))
+        _run(reg[name][0](spark, "/root/testdata/sf0.001"))
     # build the media-blob side tables OUTSIDE the timed region: codec
     # entries measure decode, not the one-time corpus synthesis (r8)
-    from aprs2influxdb_spark.media_store import (
-        ensure_audio_store,
-        ensure_crawl_files,
-        ensure_domain_dim,
-        ensure_image_store,
-        ensure_media,
-        ensure_prev_snapshot,
-        ensure_video_store,
-        ensure_warc_files,
-    )
-
-    ensure_media(spark, sf_dir)
-    ensure_warc_files(spark, sf_dir)
-    ensure_crawl_files(spark, sf_dir)
-    ensure_domain_dim(spark, sf_dir)
-    ensure_prev_snapshot(spark, sf_dir)
-    ensure_image_store(spark, sf_dir)
-    ensure_audio_store(spark, sf_dir)
-    ensure_video_store(spark, sf_dir)
+    for ensure in (
+        ms.ensure_media, ms.ensure_warc_files, ms.ensure_crawl_files,
+        ms.ensure_domain_dim, ms.ensure_prev_snapshot, ms.ensure_image_store,
+        ms.ensure_audio_store, ms.ensure_video_store,
+    ):
+        ensure(spark, sf_dir)
 
     times: dict[str, float] = {}
-    for name in headline:
-        builder, _sql = reg[name]
-        best = float("inf")
+    builds: dict[str, float] = {}
+    for name in names:
+        builder = reg[name][0]
+        best = (float("inf"), 0.0)  # (total, build) of the fastest run
         for _ in range(2):
             _drop_leftover_blocks(spark)
             t0 = time.perf_counter()
-            _run(builder(spark, sf_dir))
-            best = min(best, time.perf_counter() - t0)
-        times[name] = round(best, 3)
+            df = builder(spark, sf_dir)
+            t1 = time.perf_counter()
+            _run(df)
+            best = min(best, (time.perf_counter() - t0, t1 - t0))
+        times[name], builds[name] = round(best[0], 3), round(best[1], 3)
 
-    total = round(sum(times.values()), 3)
-    body = {
+    return {
         "metric": "headline_queries_total_sec",
-        "value": total,
+        "value": round(sum(times.values()), 3),
         "unit": "sec",
         "queries": times,
         "sf": sf,
+        "build": builds,
     }
-    # The driver records only the last ~2 KB of stdout; with 80+
-    # headline queries the full one-line body overflows that window and
-    # round 3's record came back "parsed": null.  So: persist the full
-    # per-query body to BENCH.json beside this script, print it once for
-    # humans / wide captures, then print a LAST compact line that always
-    # fits the tail — the driver's parser takes the last complete JSON
-    # line it can read.
-    out_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH.json")
-    with open(out_path, "w") as fh:
-        json.dump(body, fh, indent=1)
-        fh.write("\n")
-    print(json.dumps(body))
-    # Costliest queries first, as many as fit the byte budget — the
-    # driver still gets a real (if truncated) per-query dict even when
-    # the registry outgrows the tail window again.
-    compact = {
-        "metric": "headline_queries_total_sec",
-        "value": total,
-        "unit": "sec",
-        "sf": sf,
+
+
+def compact(body: dict) -> dict:
+    """The driver records only the last ~2 KB of stdout; with 80+
+    headline queries the full one-line body overflows that window and
+    round 3's record came back "parsed": null.  So the full body goes to
+    BENCH.json and this LAST compact line always fits the tail — the
+    driver's parser takes the last complete JSON line it can read.
+    Costliest queries first, as many as fit the byte budget."""
+    times = body["queries"]
+    line = {
+        "metric": body["metric"],
+        "value": body["value"],
+        "unit": body["unit"],
+        "sf": body["sf"],
         "n_queries": len(times),
         "queries_file": "BENCH.json",
-        # n_listed is patched below: the per-query dict is TRUNCATED to
-        # the slowest entries that fit the tail window, so a query
-        # missing from it most likely got FASTER, not dropped — compare
-        # n_listed to n_queries before calling anything dropped (round
-        # 12, verdict-r11 minor #5: 11 phantom "dropped" queries were
-        # entries that fell off this list by improving).
+        # the per-query dict is TRUNCATED to the slowest entries that
+        # fit the tail window, so a query missing from it most likely
+        # got FASTER, not dropped — compare n_listed to n_queries before
+        # calling anything dropped
         "n_listed": 0,
         "queries": {},
     }
     for name, sec in sorted(times.items(), key=lambda kv: -kv[1]):
-        compact["queries"][name] = sec
-        if len(json.dumps(compact)) > 1500:
-            del compact["queries"][name]
+        line["queries"][name] = sec
+        if len(json.dumps(line)) > 1500:
+            del line["queries"][name]
             break
-    compact["n_listed"] = len(compact["queries"])
-    print(json.dumps(compact))
+    line["n_listed"] = len(line["queries"])
+    return line
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
+    spark = get_spark("bench")
+    spark.sparkContext.setLogLevel("ERROR")
+    body = run(spark, sf_dir, [s.strip() for s in only.split(",")] if only else HEADLINE)
+    print(json.dumps(body))
+    if only:
+        return
+    out_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH.json")
+    with open(out_path, "w") as fh:
+        json.dump(body, fh, indent=1)
+        fh.write("\n")
+    print(json.dumps(compact(body)))
 
 
 if __name__ == "__main__":

@@ -1,0 +1,50 @@
+"""The measurement harness (``bench.py``) and the scripts in ``tools/``:
+every script still imports against the current package, and
+``bench.run`` times any registry entries without touching BENCH.json."""
+
+from __future__ import annotations
+
+import importlib.util
+import json
+from pathlib import Path
+
+import pytest
+
+ROOT = Path(__file__).resolve().parent.parent
+SCRIPTS = sorted(ROOT.glob("tools/*.py")) + [ROOT / "bench.py"]
+
+
+def _load(path: Path):
+    spec = importlib.util.spec_from_file_location(f"_script_{path.stem}", path)
+    module = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(module)
+    return module
+
+
+@pytest.mark.parametrize("path", SCRIPTS, ids=lambda p: str(p.relative_to(ROOT)))
+def test_script_imports(path, monkeypatch):
+    monkeypatch.chdir(ROOT)  # sweep.py imports the tests package from the cwd
+    _load(path)  # runs the module body, not its entry point
+
+
+def test_bench_run_any_entries(spark, sf_dir):
+    bench = _load(ROOT / "bench.py")
+    committed = (ROOT / "BENCH.json").read_bytes()
+    names = ["pricing_summary", "market_share"]  # one headline, one not
+
+    body = bench.run(spark, sf_dir, names)
+
+    assert list(body["queries"]) == names
+    assert list(body["build"]) == names
+    for name in names:
+        assert 0 <= body["build"][name] <= body["queries"][name]
+    line = bench.compact(body)
+    assert list(line) == [
+        "metric", "value", "unit", "sf", "n_queries", "queries_file", "n_listed", "queries",
+    ]
+    assert line["n_queries"] == line["n_listed"] == 2
+    assert len(json.dumps(line)) <= 1500
+    assert (ROOT / "BENCH.json").read_bytes() == committed
+
+    with pytest.raises(SystemExit):
+        bench.run(spark, sf_dir, ["pricing_summary", "no_such_entry"])
