@@ -122,14 +122,12 @@ def minhash_signatures(
 
 
 def _signatures_from_shingles(
-    arr: DataFrame, id_col: str, num_hashes: int, carry: tuple = ()
+    arr: DataFrame, id_col: str, num_hashes: int
 ) -> DataFrame:
     """(id, sig) from an (id, sh shingle-hash-array) frame — the
     signature math of :func:`minhash_signatures`, factored out so
     :func:`minhash_lsh_pairs` can derive signatures AND verification
-    sets from ONE checkpointed shingle index.  ``carry`` names extra
-    input columns to pass through unchanged (the soak's ingest gate
-    keeps the raw payload beside the signature)."""
+    sets from ONE checkpointed shingle index."""
     from aprs2influxdb_spark.functions.hashing import minhash_coeffs
     from aprs2influxdb_spark.functions.plancache import column_memo
 
@@ -144,7 +142,7 @@ def _signatures_from_shingles(
         ("minhash_hs",),
         lambda: F.transform(F.col("sh"), lambda s: F.pmod(s, F.lit(MINHASH_P))),
     )
-    hashed = arr.select(F.col(id_col), *carry, hs.alias("hs"))
+    hashed = arr.select(F.col(id_col), hs.alias("hs"))
 
     def _sig():
         return F.array(
@@ -158,7 +156,7 @@ def _signatures_from_shingles(
         )
 
     sig = column_memo(spark, ("minhash_sig", num_hashes), _sig)
-    return hashed.select(F.col(id_col), *carry, sig.alias("sig"))
+    return hashed.select(F.col(id_col), sig.alias("sig"))
 
 
 def _lsh_index(
@@ -185,13 +183,12 @@ def _lsh_index(
 
 
 def banded_keys(
-    sigs: DataFrame, id_col: str, num_hashes: int, bands: int, carry: tuple = ()
+    sigs: DataFrame, id_col: str, num_hashes: int, bands: int
 ) -> DataFrame:
     """Exploded ``(id, band, key)`` band-bucket keys from an
     ``(id, sig)`` frame — pure stateless expressions (factored out of
     :func:`_lsh_index` so the streaming ingest gate can band a
-    signature STREAM with the exact same keys the batch index uses).
-    ``carry`` columns pass through beside the keys."""
+    signature STREAM with the exact same keys the batch index uses)."""
     from aprs2influxdb_spark.functions.plancache import column_memo
 
     def _bk():
@@ -206,8 +203,8 @@ def banded_keys(
 
     # memoized unresolved Column — see _signatures_from_shingles
     bk = column_memo(sigs.sparkSession, ("banded_bk", num_hashes, bands), _bk)
-    return sigs.select(F.col(id_col), *carry, bk.alias("bk")).select(
-        id_col, *carry, "bk.band", "bk.key"
+    return sigs.select(F.col(id_col), bk.alias("bk")).select(
+        id_col, "bk.band", "bk.key"
     )
 
 

@@ -2078,7 +2078,7 @@ def q_streaming_srp_gate(spark, sf):
     :func:`streaming.bounded.streaming_srp_near_dup` (round 11,
     verdict-r10 missing #3: the lexical/image/audio gates' missing
     twin — an arriving doc's EMBEDDING is screened inline via SRP
-    sign-bucket band keys through the same ``_lsh_bucket_group``
+    sign-bucket band keys through the same ``sharded_bucket_gate``
     keyed state)."""
     from aprs2influxdb_spark.streaming.bounded import streaming_srp_near_dup
 
@@ -9867,7 +9867,7 @@ def q_streaming_image_near_dup(spark, sf, drained: bool = False):
     blobs decode + dHash on the stream (stateless ``mapInPandas``),
     band into the 4×28-bit Hamming-LSH keys, and pass through the
     SAME keyed-state bucket gate the text stream uses
-    (``bounded._lsh_bucket_group`` — one (long, long) per band
+    (``bounded.sharded_bucket_gate`` — one (long, long) per band
     bucket, ordered-ingest contract): each image is flagged with the
     smallest earlier image sharing any band, exact-Hamming
     verification deferred to the batch ``image_near_dup`` pass —

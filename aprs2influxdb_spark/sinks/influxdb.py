@@ -10,7 +10,7 @@ throughput defect, SURVEY §4 "Anti-batching").  Engine behavior:
   1 request/point to 1 request/5000 points; the lines written are
   summed per batch and logged at DEBUG on the ``aprs2influxdb_spark``
   logger;
-- the broadcast-calibrated sink (the cli.py default) calibrates,
+- the broadcast-calibrated sink (the daemon's, ``cli.start``) calibrates,
   renders and writes in that same job, which also brings the batch's
   equation rows back to the driver: no persist, no second pass over
   the batch, no shuffle;
@@ -192,22 +192,20 @@ def influxdb_sink_broadcast_calibrated(
     batch_size: int = 5000, trigger_seconds: int | None = None,
     user: str | None = None, password: str | None = None,
 ):
-    """The broadcast-dim calibration strategy's sink (round 8): the
-    PACKET stream arrives uncalibrated; each micro-batch joins the
-    driver-held compacted equations dim (broadcast), renders line
-    protocol, and POSTs — no keyed state operator, no state store.
+    """The daemon's sink (``cli.start``): the PACKET stream arrives
+    uncalibrated; each micro-batch joins the driver-held compacted
+    equations dim (broadcast), renders line protocol, and POSTs — no
+    keyed state operator, no state store.
 
-    Why this is the cli.py DEFAULT: the round-8 same-session 1M-frame
-    soak A/B measured 4,475 rows/s for this strategy vs 2,683
-    (applyInPandasWithState) and 2,579 (transformWithState) — the
-    keyed-state operators pay a per-key shuffle + Arrow state
-    round-trip for state that is ~9k keys × ≤15 doubles, i.e.
-    broadcast-sized by orders of magnitude (BASELINE.md round-8
-    table).  The crossover the keyed strategies exist for is a key
-    space too large to broadcast (tens of millions of senders) or
-    strict WITHIN-batch equation application; the reference's world
-    (thousands of callsigns, per-batch granularity) sits far on this
-    side of it.
+    Why broadcast: the calibration state is ~9k keys × ≤15 doubles,
+    broadcast-sized by orders of magnitude, and keyed state would pay a
+    per-key shuffle and an Arrow state round-trip for it (the round-8
+    1M-frame soak A/B: 4,475 rows/s here against 2,683 for
+    ``applyInPandasWithState`` and 2,579 for ``transformWithState``,
+    BASELINE.md round 8).  A key space too large to broadcast (tens of
+    millions of senders) or strict WITHIN-batch equation application
+    would need keyed state; the registry's ``streaming_asof_*``
+    entries keep that form.
 
     One pass per batch: the un-persisted batch is joined to the dim
     (whose equations are parsed already), projected once to ``line``

@@ -813,106 +813,7 @@ LSH_GATE_OUTPUT = StructType(
         StructField("anchor", LongType()),  # null: first in its bucket
     ]
 )
-LSH_GATE_STATE = StructType(
-    [
-        StructField("first_doc", LongType()),  # min doc_id ever seen
-        StructField("last_doc", LongType()),  # ordered-ingest witness
-    ]
-)
 _LSH_GATE_EMPTY = 1 << 62  # first_doc sentinel before any arrival
-
-
-def _lsh_bucket_group(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Per-band-bucket near-dup state: ONE long per bucket (the
-    smallest doc_id ever seen there).  Each arriving (doc, band) row
-    is emitted with the bucket's current anchor — the earlier doc it
-    collides with, or null when it is the bucket's first occupant —
-    then lowers the anchor if it is smaller.  The ordered-ingest
-    contract (doc_id-ascending per bucket across batches) is enforced
-    like the pack cursor's: a regressing batch raises the ``LSH:``
-    dead-letter error rather than silently re-anchoring."""
-    existed = state.exists
-    first, last = (state.get if existed else (_LSH_GATE_EMPTY, -1))
-    chunks = list(pdfs)
-    if not chunks:
-        if existed:
-            state.update((first, last))
-        return
-    # per-group cost IS the gate's hot path (measured round 11: ~19k
-    # buckets per 5k-doc batch, so every microsecond here is ×4/doc):
-    # skip the concat for the 1-chunk common case and the sort when the
-    # batch already arrives doc_id-ascending
-    pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-    if not pdf["doc_id"].is_monotonic_increasing:
-        # ignore_index: the output dict below mixes index-carrying
-        # Series with positional arrays — a shuffled index must not
-        # survive the sort (ADVICE r11)
-        pdf = pdf.sort_values("doc_id", ignore_index=True)
-    # drained-index coverage (round 10, verdict-r9 weak #2): when the
-    # input carries p_first/p_last columns (the stream-static join
-    # against the persisted gate index), they are constant per bucket —
-    # the bucket's pre-drain min and max doc_id
-    p_first = None
-    if "p_first" in pdf.columns and pdf["p_first"].notna().any():
-        p_first = int(pdf["p_first"].iloc[0])
-        p_last = int(pdf["p_last"].iloc[0])
-        if p_last > last:
-            last = p_last  # the persisted witness extends the contract
-    if int(pdf["doc_id"].iloc[0]) <= last:
-        raise ValueError(
-            f"LSH: out-of-order arrival in bucket {key[0]!r} — batch min "
-            f"doc_id {int(pdf['doc_id'].iloc[0])} ≤ last seen {last}"
-        )
-    if p_first is not None:
-        # the persisted index already holds this bucket's global min:
-        # ordered ingest means no future arrival can lower it, so every
-        # arriving doc anchors to it.  The bucket keeps a MINIMAL
-        # watermark — (anchor, max_seen) — rather than dropping state
-        # entirely (ADVICE r10): without it the ordered-ingest check
-        # resets to the index's p_last every batch, so a doc_id
-        # regression BETWEEN two post-drain batches in a covered bucket
-        # would pass undetected.  The state bound is unchanged in
-        # class: rows exist only for buckets actually TOUCHED after the
-        # drain — O(post-drain window), never O(corpus) (buckets the
-        # index covers but the stream never revisits hold nothing).
-        anchor = min(p_first, first)
-        state.update((anchor, int(pdf["doc_id"].iloc[-1])))
-        out = {
-            "doc_id": pdf["doc_id"].astype("int64"),
-            "band": pdf["band"].astype("int64"),
-        }
-        if "raw" in pdf.columns:  # payload pass-through (the soak gate)
-            out["raw"] = pdf["raw"]
-        out["anchor"] = pd.array([anchor] * len(pdf), dtype="Int64")
-        yield pd.DataFrame(out)
-        return
-    # vectorized anchor rule (round 11 — the itertuples loop was the
-    # other per-group hot spot).  With the batch sorted ascending the
-    # running min collapses: row 0 anchors to the pre-batch ``first``;
-    # every later row anchors to m = min(first, d₀).  ``first < d`` /
-    # ``m < d`` keeps the strict-inequality semantics of the loop
-    # (equal ids never anchor to themselves).
-    doc_ids = pdf["doc_id"].to_numpy()
-    d0 = int(doc_ids[0])
-    m = first if first < d0 else d0
-    # anchor mixes long and None: a plain list would materialize as
-    # float64/object and anchors above 2^53 would lose precision on the
-    # Arrow cast — pandas nullable Int64 keeps the long exact
-    anchors = pd.array([m] * len(doc_ids), dtype="Int64")
-    anchors[doc_ids <= m] = None
-    # row 0 is covered by the same mask: first < d₀ ⇒ m = first and
-    # d₀ > m ⇒ anchors to first; first ≥ d₀ ⇒ m = d₀ ⇒ masked to None.
-    state.update((m, int(doc_ids[-1])))
-    out = {
-        "doc_id": pdf["doc_id"].astype("int64"),
-        "band": pdf["band"].astype("int64"),
-    }
-    if "raw" in pdf.columns:  # aligned: the arrays walk pdf's order
-        out["raw"] = list(pdf["raw"])
-    out["anchor"] = anchors
-    yield pd.DataFrame(out)
 
 
 #: one state row per SHARD of the bucket-key space, holding the packed
@@ -961,12 +862,12 @@ def gate_shards_for(spark: SparkSession, n_buckets_est: int) -> int:
 def _lsh_shard_group(
     key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
-    """Shard-packed twin of :func:`_lsh_bucket_group`: one state row
-    per shard of the bucket-key space, value = the packed
-    (key → (first, last)) pairs of the shard's buckets.  Emits exactly
-    the rows the per-bucket function would (pinned by a randomized
-    replay test against it), enforces the same per-bucket
-    ordered-ingest contract, and handles the drained form's
+    """The band-bucket gate's state function: one state row per shard
+    of the bucket-key space, value = the packed (key → (first, last))
+    pairs of the shard's buckets.  Emits exactly the rows a per-bucket
+    state function would (pinned by randomized replay tests against the
+    per-bucket reference in ``tests/lsh_reference.py``), enforces the
+    per-bucket ordered-ingest contract, and handles the drained form's
     ``p_first``/``p_last`` index columns per bucket."""
     import numpy as np
 
@@ -1033,8 +934,6 @@ def _lsh_shard_group(
         "doc_id": pdf["doc_id"].astype("int64"),
         "band": pdf["band"].astype("int64"),
     }
-    if "raw" in pdf.columns:  # payload pass-through (the soak gate)
-        out["raw"] = pdf["raw"]
     out["anchor"] = anchors
     yield pd.DataFrame(out)
 
@@ -1043,11 +942,12 @@ def sharded_bucket_gate(banded: DataFrame, n_shards: int) -> DataFrame:
     """Apply the band-bucket near-dup gate with SHARDED state keying:
     deterministic ``pmod(xxhash64(key), n_shards)`` shard ids, one
     state row per shard packing its buckets' (first, last) pairs.
-    Same emitted rows, same per-bucket discipline and contract as
-    ``groupBy("key").applyInPandasWithState(_lsh_bucket_group, …)`` —
-    but the per-batch Python dispatch count drops from one per bucket
-    to one per touched shard (guide §4: shrink the number of state
-    groups, not just the work per group)."""
+    Same emitted rows, same per-bucket discipline and contract as a
+    per-bucket ``groupBy("key").applyInPandasWithState`` (the test
+    reference ``tests/lsh_reference.py``) — but the per-batch Python
+    dispatch count drops from one per bucket to one per touched shard
+    (guide §4: shrink the number of state groups, not just the work
+    per group)."""
     global LAST_GATE_SHARDS
     LAST_GATE_SHARDS = n_shards
     sharded = banded.withColumn(
@@ -1453,7 +1353,7 @@ def streaming_srp_near_dup(
     missing #3): each arriving vector is keyed by its SRP sign-bucket
     in ``SRP_GATE_BANDS`` independent hyperplane sets and checked
     against the SAME keyed band-bucket state the lexical gate uses
-    (``_lsh_bucket_group`` — one (long, long) per bucket, ordered
+    (``sharded_bucket_gate`` — one (long, long) per bucket, ordered
     ingest enforced).  A vector landing in any bucket with an earlier
     occupant is flagged with its smallest anchor — the semantic-dedup
     candidate screen a production ingest runs inline, exact-cosine
@@ -1552,9 +1452,10 @@ def _asof_group(
     value * latest-prior-error (identity 1.0 before any), half-up
     rounded to 4 decimals exactly like the batch ``rhu``.
 
-    Chunks are concatenated before the (ts, event_id) sort — sorting
-    per chunk would let an error row time-travel (see
-    ``streaming.calibration._calibrate_group``)."""
+    Chunks are concatenated before the (ts, event_id) sort — a key's
+    rows arrive as several Arrow chunks (split at
+    maxRecordsPerBatch), and sorting per chunk would let an error row
+    in a later chunk time-travel behind data rows of an earlier one."""
     calib = state.get[0] if state.exists else None
     chunks = list(pdfs)
     if not chunks:

@@ -9,7 +9,8 @@ wide packets DataFrame under ``readStream``.  What streaming adds:
 - windowed/watermarked analytics the reference never had (§2.9)
 - ``dedup_within_watermark``: APRS-IS upstream duplicate suppression,
   made explicit and bounded-state
-- stateful calibration lives in ``streaming.calibration``
+- calibration lives in the daemon's sink: ``streaming.calibration``'s
+  broadcast dim, applied by ``sinks.influxdb.influxdb_sink_broadcast_calibrated``
 
 Scale notes: the stateless path is shuffle-free per micro-batch; the
 windowed aggs shuffle on (window, key) with watermark-bounded state;
@@ -42,9 +43,9 @@ def stream_lines(packets: DataFrame, eqns_col: str | None = None) -> DataFrame:
     serializer ``to_line_protocol`` itself, memoized expressions and
     all.
 
-    Calibration-aware scaling needs keyed state — chain
-    ``streaming.calibration.with_streaming_calibration`` before this
-    and pass its output column name as ``eqns_col``.
+    ``eqns_col`` names a column of parsed equations to scale telemetry
+    by (e.g. ``BroadcastCalibrator.apply``'s ``eqns_json`` after
+    ``from_json``); without it telemetry is written unscaled.
     """
     return to_line_protocol(packets, eqns_col)
 

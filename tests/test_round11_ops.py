@@ -499,10 +499,8 @@ class TestLshBucketGroupVectorized:
 
         import pandas as pd
 
-        from aprs2influxdb_spark.streaming.bounded import (
-            _LSH_GATE_EMPTY,
-            _lsh_bucket_group,
-        )
+        from aprs2influxdb_spark.streaming.bounded import _LSH_GATE_EMPTY
+        from tests.lsh_reference import _lsh_bucket_group
 
         rng = random.Random(11)
         big = 1 << 55  # above 2^53: float64 would corrupt these

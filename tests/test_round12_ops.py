@@ -34,7 +34,7 @@ class _FakeState:
 def _run_reference_per_bucket(batches_by_bucket):
     """Replay each bucket's batches through ``_lsh_bucket_group`` (the
     judged per-bucket reference) and collect anchors + final state."""
-    from aprs2influxdb_spark.streaming.bounded import _lsh_bucket_group
+    from tests.lsh_reference import _lsh_bucket_group
 
     anchors: dict = {}
     states: dict = {}

@@ -375,7 +375,7 @@ class TestEpochStateBucketing:
 class TestBroadcastCalibration:
     """Round 8 (verdict-r7 item 7): the broadcast-dim calibration
     strategy — the soak A/B winner at realistic key counts, now the
-    cli.py default sink."""
+    daemon's only calibration (``cli.start``)."""
 
     def _packets(self, spark, frames):
         from aprs2influxdb_spark.sources.aprsis import decode_frames
@@ -523,17 +523,12 @@ class TestBroadcastCalibration:
         assert sorted(got) == sorted(want)
         assert "analog2=Infinity" in got[0] and "analog3=-Infinity" in got[0], got[0]
 
-    def _run_sink(self, spark, tmp_path, rows, schema):
+    def _run_sink(self, spark, tmp_path, http_server, rows, schema):
         """Drive ``influxdb_sink_broadcast_calibrated`` over ``rows``
-        (one parquet file, so one micro-batch, per entry) into a live
-        stub.  Returns the stub's lines and the Spark jobs each
-        micro-batch ran (the query's jobs run in its ``runId`` group)."""
-        import sys
-        from pathlib import Path
-
-        sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
-        from soak import _StubState, start_influx_stub
-
+        (one parquet file, so one micro-batch, per entry) into the
+        ``http_server`` stub.  Returns the stub's lines and the Spark
+        jobs each micro-batch ran (the query's jobs run in its
+        ``runId`` group)."""
         from aprs2influxdb_spark.sinks.influxdb import influxdb_sink_broadcast_calibrated
         from aprs2influxdb_spark.sources.aprsis import decode_frames
 
@@ -541,33 +536,25 @@ class TestBroadcastCalibration:
         raw = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(
             str(src / "*")
         )
+        url, handler = http_server
         tracker = spark.sparkContext.statusTracker()
-        state = _StubState(keep_lines=True)
-        srv, port = start_influx_stub(state)
         q, seen, jobs = None, set(), []
-        try:
-            for b, batch in enumerate(rows):
-                spark.createDataFrame(batch, schema).coalesce(1).write.parquet(str(src / f"b{b}"))
-                if q is None:
-                    q = influxdb_sink_broadcast_calibrated(
-                        decode_frames(raw),
-                        checkpoint=str(tmp_path / "ckpt"),
-                        url=f"http://127.0.0.1:{port}",
-                        db="t",
-                    )
-                q.processAllAvailable()
-                done = set(tracker.getJobIdsForGroup(q.runId))
-                jobs.append(len(done - seen))
-                seen = done
-            n_batches = sum(p.numInputRows > 0 for p in q.recentProgress)
-            q.stop()
-        finally:
-            srv.shutdown()
+        for b, batch in enumerate(rows):
+            spark.createDataFrame(batch, schema).coalesce(1).write.parquet(str(src / f"b{b}"))
+            if q is None:
+                q = influxdb_sink_broadcast_calibrated(
+                    decode_frames(raw), checkpoint=str(tmp_path / "ckpt"), url=url, db="t"
+                )
+            q.processAllAvailable()
+            done = set(tracker.getJobIdsForGroup(q.runId))
+            jobs.append(len(done - seen))
+            seen = done
+        n_batches = sum(p.numInputRows > 0 for p in q.recentProgress)
+        q.stop()
         assert n_batches == len(rows)
-        with state.lock:
-            return list(state.got), jobs
+        return handler.lines(), jobs
 
-    def test_cli_broadcast_sink_end_to_end(self, spark, tmp_path, monkeypatch):
+    def test_cli_broadcast_sink_end_to_end(self, spark, tmp_path, monkeypatch, http_server):
         """cli.py's default path: packet stream -> broadcast-dim
         foreachBatch sink -> HTTP lines on a live stub, over two
         micro-batches.  The stub receives exactly the batch oracle's
@@ -608,7 +595,7 @@ class TestBroadcastCalibration:
         monkeypatch.setattr(
             projections, "field_exprs", lambda *a: built.append(a) or real(*a)
         )
-        got, _ = self._run_sink(spark, tmp_path, rows, schema)
+        got, _ = self._run_sink(spark, tmp_path, http_server, rows, schema)
         assert len(built) == 1
 
         want = [
@@ -624,7 +611,7 @@ class TestBroadcastCalibration:
         assert sorted(got) == sorted(want)
         assert any("analog1=200.0" in ln for ln in got)  # batch 2 calibrated
 
-    def test_broadcast_sink_one_pass_per_batch(self, spark, tmp_path, caplog):
+    def test_broadcast_sink_one_pass_per_batch(self, spark, tmp_path, caplog, http_server):
         """Each data micro-batch is one pass over the batch: the dim's
         broadcast and the write, two Spark jobs, with the batch neither
         persisted nor shuffled for the equation rows.  The second batch
@@ -645,7 +632,9 @@ class TestBroadcastCalibration:
             for b, fs in enumerate(frames)
         ]
         with caplog.at_level(logging.DEBUG, logger="aprs2influxdb_spark"):
-            got, jobs = self._run_sink(spark, tmp_path, rows, "raw string, ingest_ts timestamp")
+            got, jobs = self._run_sink(
+                spark, tmp_path, http_server, rows, "raw string, ingest_ts timestamp"
+            )
         assert len(got) == 3
         assert jobs == [2, 2, 2]
         written = [

@@ -141,11 +141,8 @@ class TestStreamingLshNearDup:
             banded_keys,
             tokens_col,
         )
-        from aprs2influxdb_spark.streaming.bounded import (
-            LSH_GATE_OUTPUT,
-            LSH_GATE_STATE,
-            _lsh_bucket_group,
-        )
+        from aprs2influxdb_spark.streaming.bounded import LSH_GATE_OUTPUT
+        from tests.lsh_reference import LSH_GATE_STATE, _lsh_bucket_group
 
         schema = T.StructType(
             [
@@ -202,7 +199,7 @@ class TestStreamingLshNearDup:
     def test_out_of_order_arrival_raises_lsh_contract(self):
         import pandas as pd
 
-        from aprs2influxdb_spark.streaming.bounded import _lsh_bucket_group
+        from tests.lsh_reference import _lsh_bucket_group
 
         class FakeState:
             def __init__(self):

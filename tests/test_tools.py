@@ -48,3 +48,23 @@ def test_bench_run_any_entries(spark, sf_dir):
 
     with pytest.raises(SystemExit):
         bench.run(spark, sf_dir, ["pricing_summary", "no_such_entry"])
+
+
+def test_soak_accounts_for_every_frame(spark, monkeypatch):
+    """The soak at test size, in process: it starts the daemon through
+    ``cli.start``, and every frame read is a stub line or an EQNS frame
+    absorbed by calibration."""
+    from aprs2influxdb_spark import cli
+
+    started = []
+    real = cli.start
+    monkeypatch.setattr(cli, "start", lambda *a, **k: started.append(a) or real(*a, **k))
+    soak = _load(ROOT / "tools" / "soak.py")
+
+    out = soak.run_soak(2200, 2, 100, spark=spark)
+
+    assert len(started) == 1
+    assert out["leg"] == "broadcast" and out["batches"] == 2
+    assert (out["frames"], out["eqns_frames"]) == (2200, 200)  # i % 11 == 10
+    assert out["http_lines"] + out["eqns_frames"] == out["frames"]
+    assert out["ref_model_frames"] == 100
