@@ -394,11 +394,6 @@ class _Doc:
         raise ValueError(f"PDF: unsupported filter {filt!r}")
 
 
-_TEXT_OP = re.compile(
-    rb"\(|\bTj\b|\bTJ\b|\bBT\b|\bET\b|\[|\]"
-)
-
-
 def _stream_text(content: bytes) -> list[str]:
     """Pull the Tj/TJ show-text strings, in order, from one content
     stream.  Only strings inside BT/ET that are consumed by Tj/TJ

@@ -244,6 +244,68 @@ def domain_dim_path(sf_dir: str) -> str:
     )
 
 
+def _build_once(spark: SparkSession, final: str, write) -> str:
+    """Build the store at ``final`` once and return its path: a
+    ``_SUCCESS`` marker means built; otherwise ``write(tmp)`` fills a
+    per-process temp dir that is renamed into place, so a crashed
+    build can never be mistaken for a complete one."""
+    if os.path.exists(os.path.join(final, "_SUCCESS")):
+        return final
+    # about to (re)build: drop any stale plan handle cached for this
+    # path in THIS session (ADVICE r11 — the plan cache pins schema +
+    # file listing at first read and must not survive a rebuild)
+    from aprs2influxdb_spark.functions.plancache import invalidate_path
+
+    invalidate_path(spark, final)
+    tmp = f"{final}.tmp{os.getpid()}"
+    write(tmp)
+    os.makedirs(os.path.dirname(final), exist_ok=True)
+    try:
+        os.rename(tmp, final)
+    except OSError:
+        # lost a benign race: another session built it first
+        shutil.rmtree(tmp, ignore_errors=True)
+        if not os.path.exists(os.path.join(final, "_SUCCESS")):
+            raise
+    return final
+
+
+def _ensure_blob_store(
+    spark: SparkSession, sf_dir: str, final: str, col: str, classes_for, synth
+) -> str:
+    """One-blob-per-doc store: (doc_id, ``col``) parquet written from
+    executor tasks, ``synth(doc_id, n_classes)`` synthesizing each blob
+    and hard-asserting its decode roundtrip; the class count is
+    ``classes_for(n_docs)``."""
+    from pyspark.sql.types import BinaryType, LongType, StructField, StructType
+
+    def write(tmp):
+        docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
+            "doc_id"
+        )
+        nc = classes_for(docs.count())
+        schema = StructType(
+            [
+                StructField("doc_id", LongType(), False),
+                StructField(col, BinaryType(), False),
+            ]
+        )
+
+        def _gen(batches):
+            import pandas as pd
+
+            for pdf_in in batches:
+                rows = [(int(d), synth(int(d), nc)) for d in pdf_in["doc_id"]]
+                yield pd.DataFrame(rows, columns=["doc_id", col])
+
+        par = spark.sparkContext.defaultParallelism
+        docs.repartition(par, "doc_id").mapInPandas(_gen, schema).write.mode(
+            "overwrite"
+        ).parquet(tmp)
+
+    return _build_once(spark, final, write)
+
+
 # the maintained domain-quality/blocklist dimension: 40 hosts starting
 # at site5 — the corpus's hosts are site0..site19, so site0..site4 are
 # deliberately ABSENT from the dim (the unknown-host path of the left
@@ -315,10 +377,9 @@ def ensure_prev_snapshot(spark: SparkSession, sf_dir: str) -> str:
         f"prev_snapshot{PREV_SNAPSHOT_REV}_"
         + _sf_key(sf_dir).replace(".", "_").replace("-", "_")
     )
-    if not os.path.exists(os.path.join(final, "_SUCCESS")):
-        from aprs2influxdb_spark.storage import write_bucketed
 
-        _invalidate_path(spark, final)  # rebuild drops stale plan handles
+    def write(tmp):
+        from aprs2influxdb_spark.storage import write_bucketed
 
         docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
             "doc_id", "text"
@@ -348,18 +409,12 @@ def ensure_prev_snapshot(spark: SparkSession, sf_dir: str) -> str:
                 "text_md5"
             ),
         )
-        tmp = f"{final}.tmp{os.getpid()}"
         write_bucketed(
             kept.unionByName(gone), name, PREV_SNAPSHOT_BUCKETS, "doc_id", path=tmp
         )
         spark.sql(f"DROP TABLE IF EXISTS {name}")  # re-point at the final path
-        try:
-            os.rename(tmp, final)
-        except OSError:
-            # lost a benign race: another session built it first
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not os.path.exists(os.path.join(final, "_SUCCESS")):
-                raise
+
+    _build_once(spark, final, write)
     if not spark.catalog.tableExists(name):
         schema = spark.read.parquet(final).schema
         cols = ", ".join(
@@ -389,42 +444,33 @@ def ensure_domain_dim(spark: SparkSession, sf_dir: str) -> str:
     the host index (md5-hash-derived block flag ~1/5 and quality
     ppm), which is what lets the DuckDB oracle mirror the dim with
     ``generate_series`` instead of reading the file."""
-    final = domain_dim_path(sf_dir)
-    if os.path.exists(os.path.join(final, "_SUCCESS")):
-        return final
-    # about to (re)build: drop any stale plan handle cached for this
-    # path in THIS session (ADVICE r11 — the plan cache pins schema +
-    # file listing at first read and must not survive a rebuild)
-    _invalidate_path(spark, final)
-    from pyspark.sql import functions as F
 
-    from aprs2influxdb_spark.functions.hashing import portable_hash64
+    def write(tmp):
+        from pyspark.sql import functions as F
 
-    i = (F.col("id") + DOMAIN_DIM_FIRST).cast("long")
-    dim = spark.range(DOMAIN_DIM_HOSTS).select(
-        F.concat(F.lit("site"), i.cast("string"), F.lit(".example.com")).alias("host"),
-        (
+        from aprs2influxdb_spark.functions.hashing import portable_hash64
+
+        i = (F.col("id") + DOMAIN_DIM_FIRST).cast("long")
+        dim = spark.range(DOMAIN_DIM_HOSTS).select(
+            F.concat(F.lit("site"), i.cast("string"), F.lit(".example.com")).alias(
+                "host"
+            ),
+            (
+                F.pmod(
+                    portable_hash64(F.concat(F.lit("block_site"), i.cast("string"))),
+                    F.lit(5),
+                )
+                == 0
+            ).alias("is_blocked"),
             F.pmod(
-                portable_hash64(F.concat(F.lit("block_site"), i.cast("string"))),
-                F.lit(5),
-            )
-            == 0
-        ).alias("is_blocked"),
-        F.pmod(
-            portable_hash64(F.concat(F.lit("dq_site"), i.cast("string"))),
-            F.lit(1_000_000),
-        ).alias("quality_ppm"),
-        F.lit(DOMAIN_DIM_STAMP).cast("date").alias("updated_at"),
-    )
-    tmp = f"{final}.tmp{os.getpid()}"
-    dim.coalesce(1).write.mode("overwrite").parquet(tmp)
-    try:
-        os.rename(tmp, final)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not os.path.exists(os.path.join(final, "_SUCCESS")):
-            raise
-    return final
+                portable_hash64(F.concat(F.lit("dq_site"), i.cast("string"))),
+                F.lit(1_000_000),
+            ).alias("quality_ppm"),
+            F.lit(DOMAIN_DIM_STAMP).cast("date").alias("updated_at"),
+        )
+        dim.coalesce(1).write.mode("overwrite").parquet(tmp)
+
+    return _build_once(spark, domain_dim_path(sf_dir), write)
 
 
 def _gen_schema():
@@ -518,59 +564,24 @@ def image_store_path(sf_dir: str) -> str:
     )
 
 
+def _checked_png(d: int, nc: int) -> bytes:
+    """``synth_image_png`` with its decode roundtrip hard-asserted."""
+    from aprs2influxdb_spark.functions.png import decode_png
+
+    blob = synth_image_png(d, nc)
+    w, h, mode, px = decode_png(blob)
+    assert (w, h, mode) == (8, 8, "L") and list(px) == image_luma(d, nc)
+    return blob
+
+
 def ensure_image_store(spark: SparkSession, sf_dir: str) -> str:
     """Build (once) and return the image blob store for ``sf_dir`` —
     (doc_id, png) parquet, written from executor tasks with a
     decode-roundtrip hard assert per blob.  Idempotent; atomic via
     temp-dir + rename (the ``ensure_media`` discipline)."""
-    final = image_store_path(sf_dir)
-    if os.path.exists(os.path.join(final, "_SUCCESS")):
-        return final
-    # about to (re)build: drop any stale plan handle cached for this
-    # path in THIS session (ADVICE r11 — the plan cache pins schema +
-    # file listing at first read and must not survive a rebuild)
-    _invalidate_path(spark, final)
-    from pyspark.sql.types import BinaryType, LongType, StructField, StructType
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
-        "doc_id"
+    return _ensure_blob_store(
+        spark, sf_dir, image_store_path(sf_dir), "png", image_classes_for, _checked_png
     )
-    nc = image_classes_for(docs.count())
-    schema = StructType(
-        [
-            StructField("doc_id", LongType(), False),
-            StructField("png", BinaryType(), False),
-        ]
-    )
-
-    def _gen(batches):
-        import pandas as pd
-
-        from aprs2influxdb_spark.functions.png import decode_png
-
-        for pdf_in in batches:
-            rows = []
-            for doc_id in pdf_in["doc_id"]:
-                d = int(doc_id)
-                blob = synth_image_png(d, nc)
-                w, h, mode, px = decode_png(blob)
-                assert (w, h, mode) == (8, 8, "L") and list(px) == image_luma(d, nc)
-                rows.append((d, blob))
-            yield pd.DataFrame(rows, columns=["doc_id", "png"])
-
-    par = spark.sparkContext.defaultParallelism
-    tmp = f"{final}.tmp{os.getpid()}"
-    docs.repartition(par, "doc_id").mapInPandas(_gen, schema).write.mode(
-        "overwrite"
-    ).parquet(tmp)
-    os.makedirs(os.path.dirname(final), exist_ok=True)
-    try:
-        os.rename(tmp, final)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not os.path.exists(os.path.join(final, "_SUCCESS")):
-            raise
-    return final
 
 
 # ------------------------------------------------- the audio store
@@ -611,60 +622,23 @@ def audio_store_path(sf_dir: str) -> str:
     )
 
 
+def _checked_wav(d: int, nc: int) -> bytes:
+    """``synth_audio_wav`` with its decode roundtrip hard-asserted."""
+    from aprs2influxdb_spark.functions.wav import decode_wav_pcm16
+
+    blob = synth_audio_wav(d, nc)
+    _rate, ch, samples = decode_wav_pcm16(blob)
+    assert ch == 1 and samples == [audio_sample(d, nc, i) for i in range(AUD_SAMPLES)]
+    return blob
+
+
 def ensure_audio_store(spark: SparkSession, sf_dir: str) -> str:
     """Build (once) and return the audio blob store — (doc_id, wav)
     parquet, decode-roundtrip hard-asserted per blob; idempotent,
     atomic (the ``ensure_image_store`` discipline)."""
-    final = audio_store_path(sf_dir)
-    if os.path.exists(os.path.join(final, "_SUCCESS")):
-        return final
-    # about to (re)build: drop any stale plan handle cached for this
-    # path in THIS session (ADVICE r11 — the plan cache pins schema +
-    # file listing at first read and must not survive a rebuild)
-    _invalidate_path(spark, final)
-    from pyspark.sql.types import BinaryType, LongType, StructField, StructType
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
-        "doc_id"
+    return _ensure_blob_store(
+        spark, sf_dir, audio_store_path(sf_dir), "wav", image_classes_for, _checked_wav
     )
-    nc = image_classes_for(docs.count())
-    schema = StructType(
-        [
-            StructField("doc_id", LongType(), False),
-            StructField("wav", BinaryType(), False),
-        ]
-    )
-
-    def _gen(batches):
-        import pandas as pd
-
-        from aprs2influxdb_spark.functions.wav import decode_wav_pcm16
-
-        for pdf_in in batches:
-            rows = []
-            for doc_id in pdf_in["doc_id"]:
-                d = int(doc_id)
-                blob = synth_audio_wav(d, nc)
-                _rate, ch, samples = decode_wav_pcm16(blob)
-                assert ch == 1 and samples == [
-                    audio_sample(d, nc, i) for i in range(AUD_SAMPLES)
-                ]
-                rows.append((d, blob))
-            yield pd.DataFrame(rows, columns=["doc_id", "wav"])
-
-    par = spark.sparkContext.defaultParallelism
-    tmp = f"{final}.tmp{os.getpid()}"
-    docs.repartition(par, "doc_id").mapInPandas(_gen, schema).write.mode(
-        "overwrite"
-    ).parquet(tmp)
-    os.makedirs(os.path.dirname(final), exist_ok=True)
-    try:
-        os.rename(tmp, final)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not os.path.exists(os.path.join(final, "_SUCCESS")):
-            raise
-    return final
 
 
 # ------------------------------------------------- the video store
@@ -747,100 +721,46 @@ def video_store_path(sf_dir: str) -> str:
     )
 
 
+def _checked_mp4(d: int, nc: int) -> bytes:
+    """``synth_video_mp4`` with its decode roundtrip hard-asserted."""
+    from aprs2influxdb_spark.functions.jpeg import decode_jpeg_gray
+    from aprs2influxdb_spark.functions.mp4 import parse_mp4, read_sample
+
+    blob = synth_video_mp4(d, nc)
+    m = parse_mp4(blob)
+    assert len(m["samples"]) == VID_FRAMES
+    for k, s in enumerate(m["samples"]):
+        _w, _h, px = decode_jpeg_gray(read_sample(blob, s))
+        assert px == video_frame_pixels(d, nc, k)
+    return blob
+
+
 def ensure_video_store(spark: SparkSession, sf_dir: str) -> str:
     """Build (once) and return the video blob store — (doc_id, mp4)
     parquet, decode-roundtrip hard-asserted per frame; idempotent,
     atomic (the ``ensure_image_store`` discipline)."""
-    final = video_store_path(sf_dir)
-    if os.path.exists(os.path.join(final, "_SUCCESS")):
-        return final
-    # about to (re)build: drop any stale plan handle cached for this
-    # path in THIS session (ADVICE r11 — the plan cache pins schema +
-    # file listing at first read and must not survive a rebuild)
-    _invalidate_path(spark, final)
-    from pyspark.sql.types import BinaryType, LongType, StructField, StructType
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
-        "doc_id"
+    return _ensure_blob_store(
+        spark, sf_dir, video_store_path(sf_dir), "mp4", video_classes_for, _checked_mp4
     )
-    nc = video_classes_for(docs.count())
-    schema = StructType(
-        [
-            StructField("doc_id", LongType(), False),
-            StructField("mp4", BinaryType(), False),
-        ]
-    )
-
-    def _gen(batches):
-        import pandas as pd
-
-        from aprs2influxdb_spark.functions.jpeg import decode_jpeg_gray
-        from aprs2influxdb_spark.functions.mp4 import parse_mp4, read_sample
-
-        for pdf_in in batches:
-            rows = []
-            for doc_id in pdf_in["doc_id"]:
-                d = int(doc_id)
-                blob = synth_video_mp4(d, nc)
-                m = parse_mp4(blob)
-                assert len(m["samples"]) == VID_FRAMES
-                for k, s in enumerate(m["samples"]):
-                    _w, _h, px = decode_jpeg_gray(read_sample(blob, s))
-                    assert px == video_frame_pixels(d, nc, k)
-                rows.append((d, blob))
-            yield pd.DataFrame(rows, columns=["doc_id", "mp4"])
-
-    par = spark.sparkContext.defaultParallelism
-    tmp = f"{final}.tmp{os.getpid()}"
-    docs.repartition(par, "doc_id").mapInPandas(_gen, schema).write.mode(
-        "overwrite"
-    ).parquet(tmp)
-    os.makedirs(os.path.dirname(final), exist_ok=True)
-    try:
-        os.rename(tmp, final)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not os.path.exists(os.path.join(final, "_SUCCESS")):
-            raise
-    return final
 
 
 def ensure_media(spark: SparkSession, sf_dir: str) -> str:
     """Build (once) and return the media parquet path for ``sf_dir``.
     Idempotent; atomic via temp-dir + rename; parallel via Spark."""
-    final = media_path(sf_dir)
-    if os.path.exists(os.path.join(final, "_SUCCESS")):
-        return final
-    # about to (re)build: drop any stale plan handle cached for this
-    # path in THIS session (ADVICE r11 — the plan cache pins schema +
-    # file listing at first read and must not survive a rebuild)
-    _invalidate_path(spark, final)
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
-        "doc_id", "text"
-    )
-    par = spark.sparkContext.defaultParallelism
-    tmp = f"{final}.tmp{os.getpid()}"
-    (
-        docs.repartition(par, "doc_id")
-        .mapInPandas(_generate, _gen_schema())
-        .write.mode("overwrite")
-        .parquet(tmp)
-    )
-    os.makedirs(os.path.dirname(final), exist_ok=True)
-    try:
-        os.rename(tmp, final)
-    except OSError:
-        # lost a benign race: another session built it first
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not os.path.exists(os.path.join(final, "_SUCCESS")):
-            raise
-    return final
 
+    def write(tmp):
+        docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
+            "doc_id", "text"
+        )
+        par = spark.sparkContext.defaultParallelism
+        (
+            docs.repartition(par, "doc_id")
+            .mapInPandas(_generate, _gen_schema())
+            .write.mode("overwrite")
+            .parquet(tmp)
+        )
 
-def _invalidate_path(spark: SparkSession, path: str) -> None:
-    from aprs2influxdb_spark.functions.plancache import invalidate_path
-
-    invalidate_path(spark, path)
+    return _build_once(spark, media_path(sf_dir), write)
 
 
 def media_table(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
@@ -898,55 +818,44 @@ def _ensure_member_files(spark: SparkSession, sf_dir: str, final: str, synth) ->
     ``doc_id % n_shards`` class, ascending; written from executor
     tasks (one shard per task after an explicit repartition), never
     via the driver; temp-dir + rename for crash safety."""
-    if os.path.exists(os.path.join(final, "_SUCCESS")):
-        return final
-    # about to (re)build: drop any stale plan handle cached for this
-    # path in THIS session (ADVICE r11 — the plan cache pins schema +
-    # file listing at first read and must not survive a rebuild)
-    _invalidate_path(spark, final)
     from pyspark.sql import functions as F
     from pyspark.sql.types import IntegerType, StructField, StructType
 
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
-        "doc_id", "text"
-    )
-    tmp = f"{final}.tmp{os.getpid()}"
-    os.makedirs(tmp, exist_ok=True)
-    out_schema = StructType([StructField("shard", IntegerType(), False)])
+    def write(tmp):
+        docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
+            "doc_id", "text"
+        )
+        os.makedirs(tmp, exist_ok=True)
+        out_schema = StructType([StructField("shard", IntegerType(), False)])
 
-    n_shards = warc_shards_for(docs.count())
+        n_shards = warc_shards_for(docs.count())
 
-    def _write_shards(batches):
-        import pandas as pd
+        def _write_shards(batches):
+            import pandas as pd
 
-        members: dict[int, list[tuple[int, bytes]]] = {}
-        for pdf_in in batches:
-            for doc_id, text in zip(pdf_in["doc_id"], pdf_in["text"]):
-                d = int(doc_id)
-                members.setdefault(d % n_shards, []).append((d, synth(d, text)))
-        done = []
-        for shard, blobs in members.items():
-            blobs.sort()
-            with open(os.path.join(tmp, f"shard-{shard:05d}.warc.gz"), "wb") as fh:
-                for _, blob in blobs:
-                    fh.write(blob)
-            done.append(shard)
-        yield pd.DataFrame({"shard": done})
+            members: dict[int, list[tuple[int, bytes]]] = {}
+            for pdf_in in batches:
+                for doc_id, text in zip(pdf_in["doc_id"], pdf_in["text"]):
+                    d = int(doc_id)
+                    members.setdefault(d % n_shards, []).append((d, synth(d, text)))
+            done = []
+            for shard, blobs in members.items():
+                blobs.sort()
+                with open(os.path.join(tmp, f"shard-{shard:05d}.warc.gz"), "wb") as fh:
+                    for _, blob in blobs:
+                        fh.write(blob)
+                done.append(shard)
+            yield pd.DataFrame({"shard": done})
 
-    written = (
-        docs.repartition(n_shards, F.col("doc_id") % n_shards)
-        .mapInPandas(_write_shards, out_schema)
-        .collect()  # tiny: one row per shard file, not a data path
-    )
-    if len({r["shard"] for r in written}) != n_shards:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise RuntimeError("shard writer produced an incomplete set")
-    with open(os.path.join(tmp, "_SUCCESS"), "w"):
-        pass
-    try:
-        os.rename(tmp, final)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not os.path.exists(os.path.join(final, "_SUCCESS")):
-            raise
-    return final
+        written = (
+            docs.repartition(n_shards, F.col("doc_id") % n_shards)
+            .mapInPandas(_write_shards, out_schema)
+            .collect()  # tiny: one row per shard file, not a data path
+        )
+        if len({r["shard"] for r in written}) != n_shards:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise RuntimeError("shard writer produced an incomplete set")
+        with open(os.path.join(tmp, "_SUCCESS"), "w"):
+            pass
+
+    return _build_once(spark, final, write)

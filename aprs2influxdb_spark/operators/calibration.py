@@ -30,10 +30,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-#: identity calibration, 5 channels of [a=0, b=1, c=0]  (:117-125)
-IDENTITY_EQNS = [[0.0, 1.0, 0.0]] * 5
-
-
 def with_effective_equations(
     packets: DataFrame,
     order_col: str = "ingest_ts",

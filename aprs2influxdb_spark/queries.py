@@ -1984,46 +1984,8 @@ WHERE len(list_intersect(a.sh, b.sh)) / len(list_distinct(list_concat(a.sh, b.sh
 """
 
 
-def q_streaming_lsh_near_dup(spark, sf):
-    """Ingest-time MinHash-LSH near-dup gate — see
-    :func:`streaming.bounded.streaming_lsh_near_dup` (one long of
-    keyed state per band bucket; candidates flagged inline, exact
-    verification deferred to the batch ``minhash_lsh_pairs`` pass)."""
-    from aprs2influxdb_spark.streaming.bounded import streaming_lsh_near_dup
-
-    return streaming_lsh_near_dup(spark, sf)
-
-
-def q_streaming_lsh_gate_drained(spark, sf):
-    """The LSH ingest gate with BOUNDED keyed state (round 10,
-    verdict-r9 weak #2): the corpus below the median doc_id plays an
-    already-drained previous epoch (persisted gate index,
-    ``bounded.lsh_gate_index``); the stream carries only post-drain
-    arrivals, covered buckets anchor via the stream-static index join
-    without creating state, and only buckets FIRST SEEN after the
-    drain hold a (long, long) — O(window), not O(corpus).  The anchor
-    rule is unchanged, so the oracle is the plain gate's SQL
-    restricted to post-drain docs."""
-    from aprs2influxdb_spark.streaming.bounded import streaming_lsh_near_dup
-
-    return streaming_lsh_near_dup(spark, sf, drained=True)
-
-
+#: drain cycles of the ``streaming_lsh_gate_cycle`` entry (builder and oracle)
 GATE_CYCLES = 3
-
-
-def q_streaming_lsh_gate_cycle(spark, sf):
-    """The LSH ingest gate's drain run as a repeatable CYCLE (round
-    11, verdict-r10 item 2): three stream→drain→resume rounds over the
-    same corpus — each interval streams against the persisted bucketed
-    index of everything before it, folds its buckets in
-    (``bounded.merge_gate_index``), and hands the next interval an
-    EMPTIED state store.  Anchors equal the plain gate's rule across
-    every cycle boundary, so the oracle is the drained gate's SQL with
-    the first boundary at ``min + (max - min) // (cycles + 1)``."""
-    from aprs2influxdb_spark.streaming.bounded import streaming_lsh_gate_cycle
-
-    return streaming_lsh_gate_cycle(spark, sf, cycles=GATE_CYCLES)
 
 
 def _lsh_near_dup_sql(
@@ -2071,28 +2033,6 @@ WITH {_TOKH_CTE}, sigs AS (
 )
 SELECT doc_id, dup_of, dup_of IS NOT NULL AS is_dup FROM anch {tail}
 """
-
-
-def q_streaming_srp_gate(spark, sf):
-    """EMBEDDING-space (semantic) near-dup gate at ingest — see
-    :func:`streaming.bounded.streaming_srp_near_dup` (round 11,
-    verdict-r10 missing #3: the lexical/image/audio gates' missing
-    twin — an arriving doc's EMBEDDING is screened inline via SRP
-    sign-bucket band keys through the same ``sharded_bucket_gate``
-    keyed state)."""
-    from aprs2influxdb_spark.streaming.bounded import streaming_srp_near_dup
-
-    return streaming_srp_near_dup(spark, sf)
-
-
-def q_streaming_srp_gate_drained(spark, sf):
-    """The SRP gate's state-BOUNDED form, drained-from-day-one (the
-    r10 image-gate precedent): vectors at or below the median vec_id
-    live in the persisted bucketed gate index; keyed state holds only
-    buckets touched after the drain."""
-    from aprs2influxdb_spark.streaming.bounded import streaming_srp_near_dup
-
-    return streaming_srp_near_dup(spark, sf, drained=True)
 
 
 def _srp_gate_sql(post_drain_only: bool = False) -> str:
@@ -8931,16 +8871,6 @@ SELECT shard, doc_id, pack_id, pack_offset, len FROM r
 """
 
 
-def q_streaming_sequence_pack(spark, sf):
-    """Sequence packing AT INGEST — see
-    :func:`streaming.bounded.streaming_sequence_pack` (per-shard
-    (pack, used) cursor in keyed state, two ints per shard); shares
-    the batch recursive-CTE oracle verbatim."""
-    from aprs2influxdb_spark.streaming.bounded import streaming_sequence_pack
-
-    return streaming_sequence_pack(spark, sf)
-
-
 def q_pack_efficiency(spark, sf):
     """Packing diagnostics over ``sequence_pack``: per-shard pack
     count, fill ratio (tokens packed / capacity consumed), and the
@@ -10790,80 +10720,13 @@ FROM f
 
 
 # --------------------------------------------------------------------
-# Streaming operators under the batch gate (bounded-stream execution;
-# see streaming.bounded for the equivalence argument per operator)
+# Oracles of the streaming operators under the batch gate (the
+# builders are streaming.bounded's own functions, registered directly;
+# see there for the equivalence argument per operator)
 # --------------------------------------------------------------------
-
-def q_streaming_time_bucket(spark, sf):
-    from aprs2influxdb_spark.streaming.bounded import streaming_time_bucket
-
-    return streaming_time_bucket(spark, sf)
-
-
-def q_streaming_sessionize_append(spark, sf):
-    """APPEND-mode session_window sessions, watermark-finalized via
-    the shared sentinel fixture; per-user rollup shares the
-    complete-mode oracle — see
-    streaming.bounded.streaming_sessionize_append."""
-    from aprs2influxdb_spark.streaming.bounded import streaming_sessionize_append
-
-    return streaming_sessionize_append(spark, sf)
-
-
-def q_streaming_line_protocol(spark, sf):
-    """The reference's production stream->serialize topology in
-    append mode (stateless; batch oracle shared) — see
-    streaming.bounded.streaming_line_protocol."""
-    from aprs2influxdb_spark.streaming.bounded import streaming_line_protocol
-
-    return streaming_line_protocol(spark, sf)
-
-
-def q_streaming_bloom_decontaminate(spark, sf):
-    """Decontamination at ingest: static 8 KB bloom (batch-built from
-    the eval slice) probed by the training-document stream — see
-    streaming.bounded.streaming_bloom_decontaminate.  Oracle = the
-    (doc_id, bloom_hits) projection of the batch bloom entry."""
-    from aprs2influxdb_spark.streaming.bounded import streaming_bloom_decontaminate
-
-    return streaming_bloom_decontaminate(spark, sf)
-
 
 def _sql_streaming_bloom() -> str:
     return f"SELECT doc_id, bloom_hits FROM ({_sql_bloom_decontaminate()})"
-
-
-def q_streaming_minhash(spark, sf):
-    """MinHash signatures at ingest (stateless append; batch oracle
-    shared) — see streaming.bounded.streaming_minhash."""
-    from aprs2influxdb_spark.streaming.bounded import streaming_minhash
-
-    return streaming_minhash(spark, sf)
-
-
-def q_streaming_srp_buckets(spark, sf):
-    """SRP bucketing at ingest (stateless append; batch-derived plane
-    knob, batch oracle shared) — see
-    streaming.bounded.streaming_srp_buckets."""
-    from aprs2influxdb_spark.streaming.bounded import streaming_srp_buckets
-
-    return streaming_srp_buckets(spark, sf)
-
-
-def q_streaming_time_bucket_append(spark, sf):
-    """APPEND-mode windowed aggregation with a watermark-advancing
-    sentinel closing every real window — pins emit-once-final
-    production semantics against the same batch oracle (see
-    streaming.bounded.streaming_time_bucket_append)."""
-    from aprs2influxdb_spark.streaming.bounded import streaming_time_bucket_append
-
-    return streaming_time_bucket_append(spark, sf)
-
-
-def q_streaming_topk(spark, sf):
-    from aprs2influxdb_spark.streaming.bounded import streaming_topk
-
-    return streaming_topk(spark, sf)
 
 
 SQL_STREAMING_TOPK = """
@@ -10878,66 +10741,10 @@ SELECT bucket, event_type, n, rk FROM (
 """
 
 
-def q_streaming_sliding_window(spark, sf):
-    from aprs2influxdb_spark.streaming.bounded import streaming_sliding_window
-
-    return streaming_sliding_window(spark, sf)
-
-
-def q_streaming_sliding_window_append(spark, sf):
-    """Emit-once-final hopping windows (watermark-sentinel driven; see
-    streaming.bounded.streaming_sliding_window_append)."""
-    from aprs2influxdb_spark.streaming.bounded import streaming_sliding_window_append
-
-    return streaming_sliding_window_append(spark, sf)
-
-
-def q_streaming_kmv_distinct(spark, sf):
-    from aprs2influxdb_spark.streaming.bounded import streaming_kmv_distinct
-
-    return streaming_kmv_distinct(spark, sf)
-
-
-def q_streaming_sampled_percentiles(spark, sf):
-    from aprs2influxdb_spark.streaming.bounded import streaming_sampled_percentiles
-
-    return streaming_sampled_percentiles(spark, sf)
-
-
-def q_streaming_cms_heavy_hitters(spark, sf):
-    from aprs2influxdb_spark.streaming.bounded import streaming_cms_heavy_hitters
-
-    return streaming_cms_heavy_hitters(spark, sf)
-
-
-def q_streaming_merge_upsert(spark, sf):
-    from aprs2influxdb_spark.streaming.bounded import streaming_merge_upsert
-
-    return streaming_merge_upsert(spark, sf)
-
-
-def q_streaming_psi(spark, sf):
-    from aprs2influxdb_spark.streaming.bounded import streaming_psi
-
-    return streaming_psi(spark, sf)
-
-
-def q_streaming_quality_gate(spark, sf):
-    from aprs2influxdb_spark.streaming.bounded import streaming_quality_gate
-
-    return streaming_quality_gate(spark, sf)
-
-
 def _sql_streaming_quality_gate() -> str:
     return (
         "SELECT * FROM (" + _quality_classifier_sql() + ") WHERE keep"
     )
-
-
-def q_streaming_ewma(spark, sf):
-    from aprs2influxdb_spark.streaming.bounded import streaming_ewma
-
-    return streaming_ewma(spark, sf)
 
 
 SQL_STREAMING_EWMA = """
@@ -10958,33 +10765,9 @@ FROM e
 """
 
 
-def q_streaming_distinct_keys(spark, sf):
-    from aprs2influxdb_spark.streaming.bounded import streaming_distinct_keys
-
-    return streaming_distinct_keys(spark, sf)
-
-
 SQL_STREAMING_DISTINCT = """
 SELECT DISTINCT user_id, event_type FROM events
 """
-
-
-def q_streaming_asof_calibration(spark, sf):
-    from aprs2influxdb_spark.streaming.bounded import streaming_asof_calibration
-
-    return streaming_asof_calibration(spark, sf)
-
-
-def q_streaming_dedup_exact(spark, sf):
-    from aprs2influxdb_spark.streaming.bounded import streaming_dedup_exact
-
-    return streaming_dedup_exact(spark, sf)
-
-
-def q_streaming_static_join(spark, sf):
-    from aprs2influxdb_spark.streaming.bounded import streaming_static_join
-
-    return streaming_static_join(spark, sf)
 
 
 SQL_STREAMING_STATIC_JOIN = """
@@ -10997,58 +10780,6 @@ SELECT e.event_id, e.user_id,
 FROM events e LEFT JOIN dim USING (user_id)
 WHERE e.event_type != 'error'
 """
-
-
-def q_streaming_stream_join(spark, sf):
-    """Watermarked stream-stream interval join (error → same-user
-    clicks within 30 min); batch interval-join oracle is exact on a
-    bounded run."""
-    from aprs2influxdb_spark.streaming.bounded import streaming_stream_join
-
-    return streaming_stream_join(spark, sf)
-
-
-def _streaming_stream_join_sql() -> str:
-    from aprs2influxdb_spark.streaming.bounded import SQL_STREAMING_STREAM_JOIN
-
-    return SQL_STREAMING_STREAM_JOIN
-
-
-def q_streaming_cumulative_users(spark, sf):
-    """Streaming distinct-user growth curve (first-seen state on the
-    stream, rollup as a batch projection of the sink)."""
-    from aprs2influxdb_spark.streaming.bounded import streaming_cumulative_users
-
-    return streaming_cumulative_users(spark, sf)
-
-
-def q_streaming_alert_transitions(spark, sf):
-    """Streaming threshold-edge detection: keyed state carries the
-    hi/lo flag across batches; bounded run == the batch lag query."""
-    from aprs2influxdb_spark.streaming.bounded import streaming_alert_transitions
-
-    return streaming_alert_transitions(spark, sf)
-
-
-def q_streaming_sessionize(spark, sf):
-    from aprs2influxdb_spark.streaming.bounded import streaming_sessionize
-
-    return streaming_sessionize(spark, sf)
-
-
-def _streaming_sessionize_sql() -> str:
-    from aprs2influxdb_spark.streaming.bounded import SQL_STREAMING_SESSIONIZE
-
-    return SQL_STREAMING_SESSIONIZE
-
-
-def q_streaming_ttl_calibration(spark, sf):
-    """TTL'd as-of calibration with event-time-timer state eviction —
-    see streaming.bounded._TtlCalibProcessor for the two-layer design
-    (oracle-checked freshness boundary; test-pinned eviction)."""
-    from aprs2influxdb_spark.streaming.bounded import streaming_ttl_calibration
-
-    return streaming_ttl_calibration(spark, sf)
 
 
 SQL_STREAMING_TTL_CALIBRATION = """
@@ -11067,29 +10798,6 @@ FROM (
   FROM events
 ) WHERE event_type != 'error'
 """
-
-
-def q_streaming_asof_tws(spark, sf):
-    from aprs2influxdb_spark.streaming.bounded import streaming_asof_tws
-
-    return streaming_asof_tws(spark, sf)
-
-
-def q_streaming_asof_ordered(spark, sf):
-    """See :func:`streaming.bounded.streaming_asof_ordered`: strict
-    event-time-ordered as-of over out-of-order delivery — the oracle
-    is the global-order batch window, and the fixture's arrival order
-    disagrees with event time, so only watermark-gated replay can
-    match it."""
-    from aprs2influxdb_spark.streaming.bounded import streaming_asof_ordered
-
-    return streaming_asof_ordered(spark, sf)
-
-
-def _tws_available() -> bool:
-    from aprs2influxdb_spark.streaming.bounded import tws_available
-
-    return tws_available()
 
 
 def q_feature_hash_vectors(spark, sf):
@@ -11210,24 +10918,6 @@ SELECT query_id, neighbor_id, cos_sim, rk FROM (
   FROM scored
 ) WHERE rk <= 5
 """
-
-
-def q_streaming_simhash(spark, sf):
-    """SimHash-at-ingest: the zero-shuffle signature projection on the
-    document stream (stateless append mode; batch oracle shared) —
-    see streaming.bounded.streaming_simhash."""
-    from aprs2influxdb_spark.streaming.bounded import streaming_simhash
-
-    return streaming_simhash(spark, sf)
-
-
-def q_streaming_token_counts(spark, sf):
-    """Token counting on the document stream (stateless append mode;
-    batch oracle shared) — see
-    streaming.bounded.streaming_token_counts."""
-    from aprs2influxdb_spark.streaming.bounded import streaming_token_counts
-
-    return streaming_token_counts(spark, sf)
 
 
 def q_tfidf_top_terms(spark, sf):
@@ -14795,16 +14485,6 @@ FROM it WHERE p = len(vals)
 """
 
 
-def q_streaming_holt_winters(spark, sf):
-    """See :func:`streaming.bounded.streaming_holt_winters` — the
-    per-event (level, trend) emission of the Holt-Winters state
-    machine at ingest; oracle = the batch recursion's per-iteration
-    rows."""
-    from aprs2influxdb_spark.streaming.bounded import streaming_holt_winters
-
-    return streaming_holt_winters(spark, sf)
-
-
 SQL_STREAMING_HOLT_WINTERS = f"""
 WITH RECURSIVE s AS (
   SELECT user_id, list(value ORDER BY ts, event_id) AS vals,
@@ -15880,15 +15560,6 @@ def q_rp_project(spark, sf):
     return sim.rp_project(_t(spark, sf, "embeddings"))
 
 
-def q_streaming_rp_project(spark, sf):
-    """Stateless streaming twin of ``rp_project`` (append mode, no
-    state — see streaming.bounded.streaming_rp_project); shares the
-    batch oracle verbatim."""
-    from aprs2influxdb_spark.streaming.bounded import streaming_rp_project
-
-    return streaming_rp_project(spark, sf)
-
-
 def q_rp_rerank_topk(spark, sf):
     """Two-stage retrieval: JL-space candidate generation + exact
     cosine re-rank — see operators.similarity.rp_rerank_topk (the
@@ -15902,6 +15573,8 @@ def q_rp_rerank_topk(spark, sf):
 # --------------------------------------------------------------------
 
 def registry() -> dict[str, tuple]:
+    from aprs2influxdb_spark.streaming import bounded as sb
+
     return {
         # APRS operator surface (D/F/N/J)
         "dispatch_counts": (q_dispatch_counts, SQL_DISPATCH),
@@ -15909,7 +15582,7 @@ def registry() -> dict[str, tuple]:
         "escape_text": (q_escape_text, SQL_ESCAPE),
         "path_join": (q_path_join, SQL_PATH_JOIN),
         "line_protocol": (q_line_protocol, SQL_LINE_PROTOCOL),
-        "streaming_line_protocol": (q_streaming_line_protocol, SQL_LINE_PROTOCOL),
+        "streaming_line_protocol": (sb.streaming_line_protocol, SQL_LINE_PROTOCOL),
         "telemetry_poly": (q_telemetry_poly, SQL_TELEMETRY_POLY),
         "json_extract": (q_json_extract, SQL_JSON_EXTRACT),
         "asof_calibration": (q_asof_calibration, SQL_ASOF_CALIBRATION),
@@ -16014,7 +15687,7 @@ def registry() -> dict[str, tuple]:
             q_holt_winters_segmented,
             _holt_winters_segmented_sql(),
         ),
-        "streaming_holt_winters": (q_streaming_holt_winters, SQL_STREAMING_HOLT_WINTERS),
+        "streaming_holt_winters": (sb.streaming_holt_winters, SQL_STREAMING_HOLT_WINTERS),
         "approx_distinct": (q_approx_distinct, _sql_approx_distinct()),
         "cms_heavy_hitters": (q_cms_heavy_hitters, _sql_cms_heavy_hitters()),
         "cms_join_estimate": (q_cms_join_estimate, _sql_cms_join_estimate()),
@@ -16031,8 +15704,8 @@ def registry() -> dict[str, tuple]:
         "ngram_jaccard_capped": (q_ngram_jaccard_capped, SQL_NGRAM_JACCARD_CAPPED),
         "ngram_containment": (q_ngram_containment, _sql_ngram_containment()),
         "minhash_signatures": (q_minhash_signatures, SQL_MINHASH_SIGNATURES),
-        "streaming_minhash": (q_streaming_minhash, SQL_MINHASH_SIGNATURES),
-        "streaming_bloom_decontaminate": (q_streaming_bloom_decontaminate, _sql_streaming_bloom()),
+        "streaming_minhash": (sb.streaming_minhash, SQL_MINHASH_SIGNATURES),
+        "streaming_bloom_decontaminate": (sb.streaming_bloom_decontaminate, _sql_streaming_bloom()),
         "minhash_lsh_pairs": (q_minhash_lsh_pairs, _minhash_lsh_sql()),
         "cross_source_dup_matrix": (q_cross_source_dup_matrix, _cross_source_dup_sql()),
         "minhash_est_error": (q_minhash_est_error, _minhash_est_error_sql()),
@@ -16072,8 +15745,8 @@ def registry() -> dict[str, tuple]:
         "label_prop_knn": (q_label_prop_knn, _label_prop_sql()),
         "simhash": (q_simhash, _simhash_sql()),
         "simhash_hamming_pairs": (q_simhash_hamming, _simhash_hamming_sql()),
-        "streaming_simhash": (q_streaming_simhash, _simhash_sql()),
-        "streaming_token_counts": (q_streaming_token_counts, SQL_TOKEN_COUNTS),
+        "streaming_simhash": (sb.streaming_simhash, _simhash_sql()),
+        "streaming_token_counts": (sb.streaming_token_counts, SQL_TOKEN_COUNTS),
         "near_dup_clusters": (q_near_dup_clusters, _near_dup_clusters_sql()),
         "dup_pagerank": (q_dup_pagerank, _dup_pagerank_sql()),
         "soft_dedup_weights": (q_soft_dedup_weights, _soft_dedup_weights_sql()),
@@ -16200,20 +15873,20 @@ def registry() -> dict[str, tuple]:
             _incremental_corpus_update_sql(),
         ),
         "streaming_corpus_diff": (q_streaming_corpus_diff, _corpus_diff_sql()),
-        "streaming_lsh_near_dup": (q_streaming_lsh_near_dup, _lsh_near_dup_sql()),
+        "streaming_lsh_near_dup": (sb.streaming_lsh_near_dup, _lsh_near_dup_sql()),
         "streaming_lsh_gate_drained": (
-            q_streaming_lsh_gate_drained,
+            lambda spark, sf: sb.streaming_lsh_near_dup(spark, sf, drained=True),
             _lsh_near_dup_sql(post_drain_only=True),
         ),
         "streaming_lsh_gate_cycle": (
-            q_streaming_lsh_gate_cycle,
+            lambda spark, sf: sb.streaming_lsh_gate_cycle(spark, sf, cycles=GATE_CYCLES),
             _lsh_near_dup_sql(
                 post_drain_only=True, drain_denominator=GATE_CYCLES + 1
             ),
         ),
-        "streaming_srp_gate": (q_streaming_srp_gate, _srp_gate_sql()),
+        "streaming_srp_gate": (sb.streaming_srp_near_dup, _srp_gate_sql()),
         "streaming_srp_gate_drained": (
-            q_streaming_srp_gate_drained,
+            lambda spark, sf: sb.streaming_srp_near_dup(spark, sf, drained=True),
             _srp_gate_sql(post_drain_only=True),
         ),
         "mixture_sample": (q_mixture_sample, SQL_MIXTURE_SAMPLE),
@@ -16222,7 +15895,7 @@ def registry() -> dict[str, tuple]:
         "global_shuffle_order": (q_global_shuffle_order, SQL_GLOBAL_SHUFFLE_ORDER),
         "doc_upsample_epochs": (q_doc_upsample_epochs, SQL_DOC_UPSAMPLE_EPOCHS),
         "sequence_pack": (q_sequence_pack, SQL_SEQUENCE_PACK),
-        "streaming_sequence_pack": (q_streaming_sequence_pack, SQL_SEQUENCE_PACK),
+        "streaming_sequence_pack": (sb.streaming_sequence_pack, SQL_SEQUENCE_PACK),
         "pack_efficiency": (q_pack_efficiency, _sql_pack_efficiency()),
         "ridge_quality_model": (q_ridge_quality_model, _sql_ridge_quality_model()),
         "model_auc": (q_model_auc, _sql_model_auc()),
@@ -16280,29 +15953,29 @@ def registry() -> dict[str, tuple]:
         "multimodal_resize": (q_multimodal_resize, SQL_MULTIMODAL_RESIZE),
         "multimodal_frames": (q_multimodal_frames, SQL_MULTIMODAL_FRAMES),
         # streaming (bounded-stream execution of the streaming plans)
-        "streaming_time_bucket": (q_streaming_time_bucket, SQL_TIME_BUCKET),
-        "streaming_time_bucket_append": (q_streaming_time_bucket_append, SQL_TIME_BUCKET),
-        "streaming_distinct_keys": (q_streaming_distinct_keys, SQL_STREAMING_DISTINCT),
-        "streaming_topk": (q_streaming_topk, SQL_STREAMING_TOPK),
-        "streaming_ewma": (q_streaming_ewma, SQL_STREAMING_EWMA),
-        "streaming_kmv_distinct": (q_streaming_kmv_distinct, _sql_approx_distinct()),
-        "streaming_cms_heavy_hitters": (q_streaming_cms_heavy_hitters, _sql_cms_heavy_hitters()),
-        "streaming_merge_upsert": (q_streaming_merge_upsert, SQL_MERGE_UPSERT),
-        "streaming_psi": (q_streaming_psi, SQL_PSI_DRIFT),
-        "streaming_quality_gate": (q_streaming_quality_gate, _sql_streaming_quality_gate()),
-        "streaming_sampled_percentiles": (q_streaming_sampled_percentiles, _sql_sampled_percentiles()),
+        "streaming_time_bucket": (sb.streaming_time_bucket, SQL_TIME_BUCKET),
+        "streaming_time_bucket_append": (sb.streaming_time_bucket_append, SQL_TIME_BUCKET),
+        "streaming_distinct_keys": (sb.streaming_distinct_keys, SQL_STREAMING_DISTINCT),
+        "streaming_topk": (sb.streaming_topk, SQL_STREAMING_TOPK),
+        "streaming_ewma": (sb.streaming_ewma, SQL_STREAMING_EWMA),
+        "streaming_kmv_distinct": (sb.streaming_kmv_distinct, _sql_approx_distinct()),
+        "streaming_cms_heavy_hitters": (sb.streaming_cms_heavy_hitters, _sql_cms_heavy_hitters()),
+        "streaming_merge_upsert": (sb.streaming_merge_upsert, SQL_MERGE_UPSERT),
+        "streaming_psi": (sb.streaming_psi, SQL_PSI_DRIFT),
+        "streaming_quality_gate": (sb.streaming_quality_gate, _sql_streaming_quality_gate()),
+        "streaming_sampled_percentiles": (sb.streaming_sampled_percentiles, _sql_sampled_percentiles()),
         "sliding_window_agg": (q_sliding_window_agg, SQL_SLIDING_WINDOW),
-        "streaming_sliding_window": (q_streaming_sliding_window, SQL_SLIDING_WINDOW),
-        "streaming_sliding_window_append": (q_streaming_sliding_window_append, SQL_SLIDING_WINDOW),
-        "streaming_asof_calibration": (q_streaming_asof_calibration, SQL_ASOF_CALIBRATION),
-        "streaming_dedup_exact": (q_streaming_dedup_exact, SQL_DEDUP_EXACT),
-        "streaming_static_join": (q_streaming_static_join, SQL_STREAMING_STATIC_JOIN),
-        "streaming_stream_join": (q_streaming_stream_join, _streaming_stream_join_sql()),
-        "streaming_alert_transitions": (q_streaming_alert_transitions, SQL_ALERT_TRANSITIONS),
-        "streaming_cumulative_users": (q_streaming_cumulative_users, SQL_CUMULATIVE_USERS),
-        "streaming_sessionize": (q_streaming_sessionize, _streaming_sessionize_sql()),
-        "streaming_sessionize_append": (q_streaming_sessionize_append, _streaming_sessionize_sql()),
-        "streaming_srp_buckets": (q_streaming_srp_buckets, _srp_sql()),
+        "streaming_sliding_window": (sb.streaming_sliding_window, SQL_SLIDING_WINDOW),
+        "streaming_sliding_window_append": (sb.streaming_sliding_window_append, SQL_SLIDING_WINDOW),
+        "streaming_asof_calibration": (sb.streaming_asof_calibration, SQL_ASOF_CALIBRATION),
+        "streaming_dedup_exact": (sb.streaming_dedup_exact, SQL_DEDUP_EXACT),
+        "streaming_static_join": (sb.streaming_static_join, SQL_STREAMING_STATIC_JOIN),
+        "streaming_stream_join": (sb.streaming_stream_join, sb.SQL_STREAMING_STREAM_JOIN),
+        "streaming_alert_transitions": (sb.streaming_alert_transitions, SQL_ALERT_TRANSITIONS),
+        "streaming_cumulative_users": (sb.streaming_cumulative_users, SQL_CUMULATIVE_USERS),
+        "streaming_sessionize": (sb.streaming_sessionize, sb.SQL_STREAMING_SESSIONIZE),
+        "streaming_sessionize_append": (sb.streaming_sessionize_append, sb.SQL_STREAMING_SESSIONIZE),
+        "streaming_srp_buckets": (sb.streaming_srp_buckets, _srp_sql()),
         # round-2f: mixture temperature weights, Zipf corpus-health fit,
         # frequency-threshold boilerplate, and JL sign projection
         "temperature_mixture": (q_temperature_mixture, SQL_TEMPERATURE_MIXTURE),
@@ -16311,21 +15984,21 @@ def registry() -> dict[str, tuple]:
         "boilerplate_chunks": (q_boilerplate_chunks, SQL_BOILERPLATE_CHUNKS),
         "rp_project": (q_rp_project, sim.rp_project_sql()),
         "rp_rerank_topk": (q_rp_rerank_topk, sim.rp_rerank_sql([0, 1, 2, 3, 4], k=10, m=200)),
-        "streaming_rp_project": (q_streaming_rp_project, sim.rp_project_sql()),
+        "streaming_rp_project": (sb.streaming_rp_project, sim.rp_project_sql()),
         # transformWithState twin registers only where its protobuf
         # dependency is importable — directly, or via the fallback
         # pure-Python runtime probe in compat.ensure_protobuf (which
         # finds the Cloud SDK's bundled copy in this container)
         **(
             {
-                "streaming_asof_tws": (q_streaming_asof_tws, SQL_ASOF_CALIBRATION),
-                "streaming_asof_ordered": (q_streaming_asof_ordered, SQL_ASOF_CALIBRATION),
+                "streaming_asof_tws": (sb.streaming_asof_tws, SQL_ASOF_CALIBRATION),
+                "streaming_asof_ordered": (sb.streaming_asof_ordered, SQL_ASOF_CALIBRATION),
                 "streaming_ttl_calibration": (
-                    q_streaming_ttl_calibration,
+                    sb.streaming_ttl_calibration,
                     SQL_STREAMING_TTL_CALIBRATION,
                 ),
             }
-            if _tws_available()
+            if sb.tws_available()
             else {}
         ),
     }

@@ -95,19 +95,13 @@ def stream_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _stream_table(spark, sf_dir, "documents")
 
 
-#: the most recent run_bounded query handle — tests read its
-#: recentProgress for state-store metrics (numRowsTotal/numRowsRemoved)
-#: after a builder returns, since the builder only returns the sink
-LAST_BOUNDED_QUERY = None
-
-
 def run_bounded(
     spark: SparkSession, stream_df: DataFrame, mode: str, name: str
 ) -> DataFrame:
     """Run a streaming DataFrame to exhaustion (AvailableNow) into a
-    memory sink; return the sink table.  Query name and checkpoint are
-    unique per call so repeated builder invocations don't collide."""
-    global LAST_BOUNDED_QUERY
+    memory sink; return the sink table.  Query name
+    (``<name>_<8 hex>``) and checkpoint are unique per call so repeated
+    builder invocations don't collide."""
     qname = f"{name}_{uuid.uuid4().hex[:8]}"
     q = (
         stream_df.writeStream.format("memory")
@@ -117,7 +111,6 @@ def run_bounded(
         .option("checkpointLocation", tempfile.mkdtemp(prefix=f"ckpt_{name}_"))
         .start()
     )
-    LAST_BOUNDED_QUERY = q
     q.awaitTermination()
     return spark.table(qname)
 
@@ -297,7 +290,9 @@ def streaming_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame
     per-batch rebuild, no stream-side state (the aggregation keys are
     within-doc, completed per micro-batch under the bounded harness'
     complete mode).  Emits (doc_id, bloom_hits) for flagged training
-    docs; the oracle recomputes the identical bitset and probes."""
+    docs; the oracle is the (doc_id, bloom_hits) projection of the
+    batch bloom entry's, which recomputes the identical bitset and
+    probes."""
     from aprs2influxdb_spark.operators.dedup import (
         BLOOM_BITS,
         BLOOM_K,
@@ -790,7 +785,8 @@ def streaming_sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     state, so documents stream straight into training-window
     assignments without a batch re-pack.  State is O(shards), not
     O(docs); the per-batch work is the same narrow (doc_id, len)
-    projection the batch plan shuffles."""
+    projection the batch plan shuffles.  Shares the batch
+    recursive-CTE oracle verbatim."""
     from aprs2influxdb_spark.queries import _pack_projection, pack_shards_for
 
     # shard count matches the batch entry's scale-aware knob (a
@@ -841,12 +837,6 @@ LSH_GATE_SHARD_STATE = StructType(
 #: 128 → 1110, 320+ → flat (the 2×cores shard floor takes over) — 128
 #: is past the knee while a full row stays ~6 KB.
 GATE_BUCKETS_PER_SHARD = 128
-
-#: shard count of the most recent ``sharded_bucket_gate`` plan — the
-#: state-bound tests recompute their expected touched-shard counts
-#: with it (the keying is deterministic: pmod(xxhash64(key), n)).
-LAST_GATE_SHARDS = 0
-
 
 def gate_shards_for(spark: SparkSession, n_buckets_est: int) -> int:
     """Scale-adaptive shard count for the bucket gate: enough shards
@@ -948,8 +938,6 @@ def sharded_bucket_gate(banded: DataFrame, n_shards: int) -> DataFrame:
     dispatch count drops from one per bucket to one per touched shard
     (guide §4: shrink the number of state groups, not just the work
     per group)."""
-    global LAST_GATE_SHARDS
-    LAST_GATE_SHARDS = n_shards
     sharded = banded.withColumn(
         "shard", F.pmod(F.xxhash64("key"), F.lit(n_shards))
     )
@@ -1157,12 +1145,6 @@ def merge_gate_index(a: DataFrame, b: DataFrame) -> DataFrame:
     )
 
 
-#: final state-store row count per cycle of the most recent
-#: ``streaming_lsh_gate_cycle`` run — tests assert each entry is the
-#: cycle's OWN touched-bucket count (state resets at every drain)
-GATE_CYCLE_STATE_ROWS: list[int] = []
-
-
 def streaming_lsh_gate_cycle(
     spark: SparkSession, sf_dir: str, cycles: int = 3
 ) -> DataFrame:
@@ -1175,18 +1157,19 @@ def streaming_lsh_gate_cycle(
     into the index, the checkpoint retires, and the next interval
     resumes with EMPTIED keyed state.  This is the production
     compaction loop (pause → fold state into the index → resume): each
-    cycle's state holds only the buckets that interval touched —
-    measured per-cycle in ``GATE_CYCLE_STATE_ROWS`` — so state returns
-    to O(window) after EVERY drain, indefinitely.
+    cycle's state holds only the buckets that interval touched (the
+    ``lsh_cycle_<c>`` query's final state-store row count) — so state
+    returns to O(window) after EVERY drain, indefinitely.
 
     Anchors stay exactly the batch rule across every cycle boundary
     (ordered ingest: a drained bucket's min can never be lowered), so
     the oracle is the plain gate's SQL restricted to docs above the
-    FIRST boundary — one closed form regardless of cycle count.  Why a
-    keyed-state export isn't used for the fold: Spark's state store is
-    not batch-readable; production folds from the drained interval's
-    persisted bronze arrivals, which is what ``lsh_gate_index`` over
-    the interval computes."""
+    FIRST boundary, ``min + (max - min) // (cycles + 1)`` — one closed
+    form regardless of cycle count.  Why a keyed-state export isn't
+    used for the fold: Spark's state store is not batch-readable;
+    production folds from the drained interval's persisted bronze
+    arrivals, which is what ``lsh_gate_index`` over the interval
+    computes."""
     from aprs2influxdb_spark.media_store import _sf_key
 
     batch = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -1198,7 +1181,6 @@ def streaming_lsh_gate_cycle(
     bounds = [
         lo + ((hi - lo) * c) // (cycles + 1) for c in range(1, cycles + 1)
     ] + [hi]
-    GATE_CYCLE_STATE_ROWS.clear()
     # ONE banding expression tree per side (memoized handles); every
     # epoch/segment variant is a doc_id filter Catalyst pushes back
     # below the banding — the previous per-cycle rebuilds were 3.2 s of
@@ -1225,13 +1207,6 @@ def streaming_lsh_gate_cycle(
             banded, gate_shards_for(spark, 4 * max(1, n_docs // (cycles + 1)))
         )
         outs.append(run_bounded(spark, gated, "append", f"lsh_cycle_{c}"))
-        totals = [
-            op["numRowsTotal"]
-            for p in LAST_BOUNDED_QUERY.recentProgress
-            for op in p.get("stateOperators", [])
-            if op.get("numRowsTotal") is not None
-        ]
-        GATE_CYCLE_STATE_ROWS.append(totals[-1] if totals else 0)
         # the DRAIN: fold the just-streamed interval into the index;
         # the next cycle's run starts from a fresh checkpoint (state
         # emptied) with the folded index carrying the coverage
@@ -1283,7 +1258,8 @@ def streaming_lsh_near_dup(
     TOUCHED after the drain — O(window), re-drainable on the next
     cycle — while the anchor rule stays exactly the batch oracle's
     (ordered ingest means a drained bucket's min can never be lowered
-    by a later arrival)."""
+    by a later arrival), so its oracle is the plain gate's SQL
+    restricted to post-drain docs."""
     n_docs = corpus_count(spark.read.parquet(f"{sf_dir}/documents.parquet"))
     # memoized banding handle — the signature tree is built once per
     # session, and the stream spreads the narrow (doc_id, text) before

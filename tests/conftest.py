@@ -22,6 +22,44 @@ def sf_dir():
     return os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 
 
+@pytest.fixture()
+def started_queries(monkeypatch):
+    """Every ``StreamingQuery`` started during the test, in start order:
+    a spy on ``DataStreamWriter.start`` keeps each handle, whose
+    ``recentProgress`` (state-store metrics included) survives the
+    query's termination."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    handles = []
+    real = DataStreamWriter.start
+
+    def start(self, *a, **k):
+        handles.append(real(self, *a, **k))
+        return handles[-1]
+
+    monkeypatch.setattr(DataStreamWriter, "start", start)
+    return handles
+
+
+@pytest.fixture()
+def gate_shards(monkeypatch):
+    """``n_shards`` of every ``bounded.sharded_bucket_gate`` call during
+    the test, in call order.  The bounded builders and the image and
+    video gates look the function up at call time, so the spy sees
+    them all."""
+    from aprs2influxdb_spark.streaming import bounded
+
+    shards = []
+    real = bounded.sharded_bucket_gate
+
+    def spy(banded, n_shards):
+        shards.append(n_shards)
+        return real(banded, n_shards)
+
+    monkeypatch.setattr(bounded, "sharded_bucket_gate", spy)
+    return shards
+
+
 class _CaptureHandler(http.server.BaseHTTPRequestHandler):
     """InfluxDB 1.x ``/write`` stub: records every POST's (path, body),
     answers 204, or 400 when the body contains one of ``reject_bodies``

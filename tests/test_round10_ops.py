@@ -176,7 +176,9 @@ class TestLshGateDrainedState:
         ).coalesce(1).write.parquet(f"{path}/documents.parquet")
         return str(path)
 
-    def test_two_phase_anchor_and_state_bound(self, spark, tmp_path):
+    def test_two_phase_anchor_and_state_bound(
+        self, spark, tmp_path, started_queries, gate_shards
+    ):
         from aprs2influxdb_spark.functions.hashing import hashed_shingles
         from aprs2influxdb_spark.operators.dedup import (
             _signatures_from_shingles,
@@ -224,19 +226,19 @@ class TestLshGateDrainedState:
             4,
         )
         # round 12: sharded state keying — one state row per
-        # pmod(xxhash64(key), LAST_GATE_SHARDS) shard packing its
+        # pmod(xxhash64(key), n_shards) shard packing its
         # buckets' (first, last) pairs; the bound is the distinct
         # shards of the buckets touched post-drain
         touched = (
             banded.filter(F.col("doc_id") > 3)
-            .select(F.pmod(F.xxhash64("key"), F.lit(bounded.LAST_GATE_SHARDS)))
+            .select(F.pmod(F.xxhash64("key"), F.lit(gate_shards[-1])))
             .distinct()
             .count()
         )
         all_buckets = banded.select("key").distinct().count()
         state_rows = [
             op["numRowsTotal"]
-            for p in bounded.LAST_BOUNDED_QUERY.recentProgress
+            for p in started_queries[-1].recentProgress
             for op in p.get("stateOperators", [])
             if op.get("numRowsTotal") is not None
         ]
@@ -374,14 +376,15 @@ class TestImageGateDrainedState:
     bound the text gate pins, asserted through the image wiring (which
     could regress independently of the shared group fn)."""
 
-    def test_state_is_post_drain_buckets_only(self, spark, sf_dir):
+    def test_state_is_post_drain_buckets_only(
+        self, spark, sf_dir, started_queries, gate_shards
+    ):
         from aprs2influxdb_spark.media_store import ensure_image_store
         from aprs2influxdb_spark.queries import (
             _image_bands,
             _image_dhash_mapper,
             q_streaming_image_near_dup,
         )
-        from aprs2influxdb_spark.streaming import bounded
 
         rows = q_streaming_image_near_dup(spark, sf_dir, drained=True).collect()
         assert rows
@@ -397,13 +400,13 @@ class TestImageGateDrainedState:
         # distinct shards of the buckets touched post-drain
         touched = (
             bands.filter(F.col("doc_id") > split)
-            .select(F.pmod(F.xxhash64("key"), F.lit(bounded.LAST_GATE_SHARDS)))
+            .select(F.pmod(F.xxhash64("key"), F.lit(gate_shards[-1])))
             .distinct()
             .count()
         )
         state_rows = [
             op["numRowsTotal"]
-            for p in bounded.LAST_BOUNDED_QUERY.recentProgress
+            for p in started_queries[-1].recentProgress
             for op in p.get("stateOperators", [])
             if op.get("numRowsTotal") is not None
         ]

@@ -48,7 +48,7 @@ class TestLshGateCycle:
         return str(path)
 
     def test_multi_drain_state_reset_and_cross_cycle_anchors(
-        self, spark, tmp_path, monkeypatch
+        self, spark, tmp_path, monkeypatch, started_queries, gate_shards
     ):
         from aprs2influxdb_spark.streaming import bounded
 
@@ -105,10 +105,21 @@ class TestLshGateCycle:
         # state RESETS at every drain: each cycle's final state-store
         # row count is that interval's OWN touched-SHARD count (round
         # 12: state keying is sharded — one row per
-        # pmod(xxhash64(key), LAST_GATE_SHARDS) shard packing its
+        # pmod(xxhash64(key), n_shards) shard packing its
         # buckets' pairs — so the bound is distinct shards of the
-        # buckets the interval touched), not a running total
-        n_shards = bounded.LAST_GATE_SHARDS
+        # buckets the interval touched), not a running total; the
+        # count is each lsh_cycle_<c> query's final numRowsTotal
+        (n_shards,) = set(gate_shards)  # one shard count for every cycle
+        cycle_state_rows = []
+        for q in started_queries:
+            if q.name.startswith("lsh_cycle_"):
+                totals = [
+                    op["numRowsTotal"]
+                    for p in q.recentProgress
+                    for op in p.get("stateOperators", [])
+                    if op.get("numRowsTotal") is not None
+                ]
+                cycle_state_rows.append(totals[-1] if totals else 0)
         per_cycle = [
             banded.filter(
                 (F.col("doc_id") > lo) & (F.col("doc_id") <= hi)
@@ -118,14 +129,11 @@ class TestLshGateCycle:
             .count()
             for lo, hi in [(2, 5), (5, 8), (8, 11)]
         ]
-        assert bounded.GATE_CYCLE_STATE_ROWS == per_cycle, (
-            bounded.GATE_CYCLE_STATE_ROWS,
-            per_cycle,
-        )
+        assert cycle_state_rows == per_cycle, (cycle_state_rows, per_cycle)
         # and each is O(interval), strictly below the whole corpus's
         # bucket count — the bound the cycle exists to hold forever
         all_buckets = banded.select("key").distinct().count()
-        for n in bounded.GATE_CYCLE_STATE_ROWS:
+        for n in cycle_state_rows:
             assert n < all_buckets
 
     def test_merge_equals_from_scratch_index(self, spark, tmp_path):
@@ -321,7 +329,9 @@ class TestSrpGate:
             dups += r["is_dup"]
         assert dups > 0, "SRP buckets at ~8 vectors each must collide"
 
-    def test_drained_state_is_post_drain_buckets_only(self, spark, sf_dir):
+    def test_drained_state_is_post_drain_buckets_only(
+        self, spark, sf_dir, started_queries, gate_shards
+    ):
         from aprs2influxdb_spark.operators.similarity import srp_planes_for
         from aprs2influxdb_spark.streaming import bounded
 
@@ -334,12 +344,12 @@ class TestSrpGate:
         np_ = srp_planes_for(emb.count(), target_bucket_size=8)
         banded = bounded._srp_gate_banded(emb, np_)
         # round 12: state keying is SHARDED — one state row per
-        # pmod(xxhash64(key), LAST_GATE_SHARDS) shard packing its
+        # pmod(xxhash64(key), n_shards) shard packing its
         # buckets' (first, last) pairs — so the post-drain bound is the
         # distinct shards of the buckets actually touched
         touched = (
             banded.filter(F.col("doc_id") > split)
-            .select(F.pmod(F.xxhash64("key"), F.lit(bounded.LAST_GATE_SHARDS)))
+            .select(F.pmod(F.xxhash64("key"), F.lit(gate_shards[-1])))
             .distinct()
             .count()
         )
@@ -348,7 +358,7 @@ class TestSrpGate:
         )
         state_rows = [
             op["numRowsTotal"]
-            for p in bounded.LAST_BOUNDED_QUERY.recentProgress
+            for p in started_queries[-1].recentProgress
             for op in p.get("stateOperators", [])
             if op.get("numRowsTotal") is not None
         ]
@@ -365,13 +375,14 @@ class TestVideoGateAndClusters:
     verification job), its drained state bound, and the keep-one
     clusters."""
 
-    def test_drained_state_is_post_drain_buckets_only(self, spark, sf_dir):
+    def test_drained_state_is_post_drain_buckets_only(
+        self, spark, sf_dir, started_queries, gate_shards
+    ):
         from aprs2influxdb_spark.media_store import ensure_video_store
         from aprs2influxdb_spark.queries import (
             _video_dhash_mapper,
             q_streaming_video_near_dup,
         )
-        from aprs2influxdb_spark.streaming import bounded
 
         rows = q_streaming_video_near_dup(spark, sf_dir, drained=True).collect()
         assert rows
@@ -401,13 +412,13 @@ class TestVideoGateAndClusters:
         # distinct shards of the buckets touched post-drain
         touched = (
             bands.filter(F.col("doc_id") > split)
-            .select(F.pmod(F.xxhash64("key"), F.lit(bounded.LAST_GATE_SHARDS)))
+            .select(F.pmod(F.xxhash64("key"), F.lit(gate_shards[-1])))
             .distinct()
             .count()
         )
         state_rows = [
             op["numRowsTotal"]
-            for p in bounded.LAST_BOUNDED_QUERY.recentProgress
+            for p in started_queries[-1].recentProgress
             for op in p.get("stateOperators", [])
             if op.get("numRowsTotal") is not None
         ]

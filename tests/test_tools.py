@@ -61,10 +61,29 @@ def test_soak_accounts_for_every_frame(spark, monkeypatch):
     monkeypatch.setattr(cli, "start", lambda *a, **k: started.append(a) or real(*a, **k))
     soak = _load(ROOT / "tools" / "soak.py")
 
-    out = soak.run_soak(2200, 2, 100, spark=spark)
+    out = soak.run_soak(2200, 2, 1500, spark=spark)
 
     assert len(started) == 1
     assert out["leg"] == "broadcast" and out["batches"] == 2
     assert (out["frames"], out["eqns_frames"]) == (2200, 200)  # i % 11 == 10
     assert out["http_lines"] + out["eqns_frames"] == out["frames"]
-    assert out["ref_model_frames"] == 100
+    # the reference leg samples every frame file, not only the first
+    assert out["ref_model_frames"] == 1500  # > one file's 1,100 frames
+    # the cold first batch is reported apart; p50/p99 cover the rest
+    assert out["first_batch_ms"] > 0
+    assert out["batch_ms_p50"] == out["batch_ms_p99"] > 0  # one warm batch
+
+
+def test_capture_plans_streaming_entry(spark, sf_dir, tmp_path, monkeypatch):
+    """The plan tool on a stateful streaming entry, in process: the file
+    holds the executed micro-batch's plan, state operator included."""
+    from aprs2influxdb_spark import session
+
+    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
+    tool = _load(ROOT / "tools" / "capture_plans.py")
+
+    argv = ["t", "streaming_time_bucket", "--sf", sf_dir, "--outdir", str(tmp_path)]
+    assert tool.main(argv) == 0
+
+    plan = (tmp_path / "streaming_time_bucket_t.txt").read_text()
+    assert "StateStoreSave" in plan and "StateStoreRestore" in plan
