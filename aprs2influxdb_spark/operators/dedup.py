@@ -87,9 +87,9 @@ def shingle_col(spark, text_col: str = "text", n: int = 3):
     ``_signatures_from_shingles``): the nested Horner/transform tree
     costs ~0.15 s of driver py4j per build and is identical for every
     shingle consumer in a SparkContext."""
-    from aprs2influxdb_spark.functions.plancache import column_memo
+    from aprs2influxdb_spark.functions.plancache import memo
 
-    return column_memo(
+    return memo(
         spark,
         ("shingles", text_col, n),
         lambda: hashed_shingles(tokens_col(text_col), n),
@@ -129,7 +129,7 @@ def _signatures_from_shingles(
     :func:`minhash_lsh_pairs` can derive signatures AND verification
     sets from ONE checkpointed shingle index."""
     from aprs2influxdb_spark.functions.hashing import minhash_coeffs
-    from aprs2influxdb_spark.functions.plancache import column_memo
+    from aprs2influxdb_spark.functions.plancache import memo
 
     # The 16-permutation expression tree costs ~0.45 s of driver py4j
     # to BUILD (round 12, cProfile of soft_dedup_weights) and is
@@ -137,7 +137,7 @@ def _signatures_from_shingles(
     # num_hashes; it resolves against column names fresh in every plan
     # (the _t plan-handle discipline at expression level).
     spark = arr.sparkSession
-    hs = column_memo(
+    hs = memo(
         spark,
         ("minhash_hs",),
         lambda: F.transform(F.col("sh"), lambda s: F.pmod(s, F.lit(MINHASH_P))),
@@ -155,7 +155,7 @@ def _signatures_from_shingles(
             ]
         )
 
-    sig = column_memo(spark, ("minhash_sig", num_hashes), _sig)
+    sig = memo(spark, ("minhash_sig", num_hashes), _sig)
     return hashed.select(F.col(id_col), sig.alias("sig"))
 
 
@@ -189,7 +189,7 @@ def banded_keys(
     ``(id, sig)`` frame — pure stateless expressions (factored out of
     :func:`_lsh_index` so the streaming ingest gate can band a
     signature STREAM with the exact same keys the batch index uses)."""
-    from aprs2influxdb_spark.functions.plancache import column_memo
+    from aprs2influxdb_spark.functions.plancache import memo
 
     def _bk():
         rows_per_band = num_hashes // bands
@@ -202,7 +202,7 @@ def banded_keys(
         )
 
     # memoized unresolved Column — see _signatures_from_shingles
-    bk = column_memo(sigs.sparkSession, ("banded_bk", num_hashes, bands), _bk)
+    bk = memo(sigs.sparkSession, ("banded_bk", num_hashes, bands), _bk)
     return sigs.select(F.col(id_col), bk.alias("bk")).select(
         id_col, "bk.band", "bk.key"
     )

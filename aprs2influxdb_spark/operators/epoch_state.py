@@ -58,6 +58,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aprs2influxdb_spark.functions.hashing import portable_hash64
+from aprs2influxdb_spark.functions.plancache import corpus_count
 from aprs2influxdb_spark.storage import write_bucketed
 from aprs2influxdb_spark.operators.dedup import (
     _lsh_index,
@@ -65,7 +66,6 @@ from aprs2influxdb_spark.operators.dedup import (
 )
 from aprs2influxdb_spark.operators.similarity import (
     _norm,
-    corpus_count,
     ivf_assignments,
     ivf_centroids_for,
     semantic_rescreen_from_state,

@@ -52,7 +52,7 @@ def synth_positions(df: DataFrame, key_col: str, span_deg: int | None = None) ->
     count when not given — the stand-in for the packet table's real
     lat/lon at the oracle gate (the operator itself never cares where
     the coordinates came from)."""
-    from aprs2influxdb_spark.functions.counts import corpus_count
+    from aprs2influxdb_spark.functions.plancache import corpus_count
 
     if span_deg is None:
         span_deg = span_deg_for(corpus_count(df))

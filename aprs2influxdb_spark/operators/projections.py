@@ -257,9 +257,9 @@ def _serializer(spark, eqns_col: str | None) -> tuple:
     Building them takes ~17,000 py4j calls (1.9-2.7 s of driver time on
     a 4-core VM, every micro-batch of the daemon's sink); they are the
     same for every batch, so they are built once per SparkContext (see
-    ``functions.plancache.column_memo``) and ``to_line_protocol`` then
+    ``functions.plancache.memo``) and ``to_line_protocol`` then
     makes ~120 calls."""
-    from aprs2influxdb_spark.functions.plancache import column_memo
+    from aprs2influxdb_spark.functions.plancache import memo
 
     def _build() -> tuple:
         eqns = F.col(eqns_col) if eqns_col else None
@@ -272,7 +272,7 @@ def _serializer(spark, eqns_col: str | None) -> tuple:
             line_case(),
         )
 
-    return column_memo(spark, ("line_protocol", eqns_col), _build)
+    return memo(spark, ("line_protocol", eqns_col), _build)
 
 
 def to_line_protocol(packets: DataFrame, eqns_col: str | None = None, drop_malformed: bool = True) -> DataFrame:

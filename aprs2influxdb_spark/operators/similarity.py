@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 import pandas as pd
 
-from aprs2influxdb_spark.functions.counts import corpus_count
+from aprs2influxdb_spark.functions.plancache import corpus_count, memo
 from aprs2influxdb_spark.functions.partitioning import spread_for_compute
 from aprs2influxdb_spark.functions.rounding import rhu
 
@@ -197,7 +197,7 @@ def cosine_near_dup_pairs(
     few planes.
 
     ``n_planes`` defaults to :func:`srp_planes_for` over the corpus
-    count (memoized per logical plan — see ``functions.counts``; pass
+    count (memoized per logical plan — see ``plancache.corpus_count``; pass
     ``n`` to skip even the first job), so the bucket count GROWS with
     the corpus — mean bucket ~``target_bucket_size`` rows — instead of
     a literal that silently degrades to n²/2^planes pairs at 1000×
@@ -1016,7 +1016,7 @@ def pca_top_component(
     eigval) rows.
 
     The fit (means + covariance + iteration) is memoized per
-    (session, logical plan) like ``functions.counts`` — the learn
+    (SparkContext, logical plan) like ``plancache.corpus_count`` — the learn
     entry and the :func:`pca_scores`-style apply entries share one
     pair of jobs instead of re-scanning per operator."""
     mu, v, lam = pca_fit(emb, id_col, vec_col, dim, iters)
@@ -1028,28 +1028,28 @@ def pca_top_component(
     )
 
 
-_PCA_CACHE: dict[tuple, tuple] = {}
-
-
 def pca_fit(
     emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding",
     dim: int = 64, iters: int = 8,
 ) -> tuple[list, list, float]:
     """(mu, sign-fixed loading vector, eigenvalue) of the corpus — the
     two distributed jobs of :func:`pca_top_component`, memoized per
-    (applicationId, semanticHash, dim, iters) under the same
-    immutable-input contract as ``functions.counts.corpus_count``."""
-    import math
-
+    (SparkContext, semanticHash, dim, iters) under the same
+    immutable-input contract as ``plancache.corpus_count``."""
     try:
-        key = (
-            emb.sparkSession.sparkContext.applicationId,
-            emb.semanticHash(), id_col, vec_col, dim, iters,
-        )
+        key = ("pca", emb.semanticHash(), id_col, vec_col, dim, iters)
     except Exception:
         key = None
-    if key is not None and key in _PCA_CACHE:
-        return _PCA_CACHE[key]
+    return memo(
+        emb.sparkSession, key, lambda: _pca_fit(emb, id_col, vec_col, dim, iters)
+    )
+
+
+def _pca_fit(
+    emb: DataFrame, id_col: str, vec_col: str, dim: int, iters: int
+) -> tuple[list, list, float]:
+    import math
+
     means = emb.agg(
         *[rhu(F.avg(F.get(F.col(vec_col), d)), 6).alias(f"m{d}") for d in range(dim)]
     ).collect()[0]
@@ -1077,10 +1077,7 @@ def pca_fit(
         lam = math.sqrt(sum(x * x for x in w))
         v = [x / lam for x in w]
     flip = -1.0 if v[max(range(dim), key=lambda i: (abs(v[i]), -i))] < 0 else 1.0
-    fit = (mu, [flip * x for x in v], lam)
-    if key is not None:
-        _PCA_CACHE[key] = fit
-    return fit
+    return mu, [flip * x for x in v], lam
 
 
 def pca_top_component_sql(dim: int = 64, iters: int = 8) -> str:

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from aprs2influxdb_spark.functions.rounding import rhu
 
 from aprs2influxdb_spark.functions.partitioning import spread_for_compute
+from aprs2influxdb_spark.functions.plancache import memo
 from aprs2influxdb_spark.operators.dedup import tokens_col
 
 
@@ -1207,16 +1208,13 @@ def zipf_fit(
 BPE_MERGES = 6
 _BPE_SEP = "·"  # '·' — cannot appear in whitespace-split ASCII tokens
 
-_BPE_CACHE: dict[tuple, list[tuple[int, str, str, str, int]]] = {}
-
-
-def _bpe_cache_key(docs: DataFrame, k: int, text_col: str):
-    """Data-aware memo key: (applicationId, sorted input files with
-    local (mtime_ns, size) stamps, logical plan hash, text column, k).
-    ``text_col`` must participate — ``semanticHash`` covers the source
-    plan, not which column the learner later reads.  Returns
-    ``None`` (→ no caching) when the DataFrame has no input files —
-    e.g. an in-memory ``createDataFrame`` — so stale hits are
+def _bpe_cache_key(docs: DataFrame, k: int, text_col: str, strategy: str):
+    """Data-aware memo key: (sorted input files with local
+    (mtime_ns, size) stamps, logical plan hash, text column, k,
+    strategy).  ``text_col`` must participate — ``semanticHash``
+    covers the source plan, not which column the learner later reads.
+    Returns ``None`` (→ no caching) when the DataFrame has no input
+    files — e.g. an in-memory ``createDataFrame`` — so stale hits are
     impossible for data Spark can't fingerprint."""
     import os
     from urllib.parse import urlparse
@@ -1232,13 +1230,7 @@ def _bpe_cache_key(docs: DataFrame, k: int, text_col: str):
                 return None  # remote storage: can't stat cheaply, don't cache
             st = os.stat(p.path or uri)
             stamps.append((uri, st.st_mtime_ns, st.st_size))
-        return (
-            docs.sparkSession.sparkContext.applicationId,
-            tuple(stamps),
-            docs.semanticHash(),
-            text_col,
-            k,
-        )
+        return ("bpe", tuple(stamps), docs.semanticHash(), text_col, k, strategy)
     except Exception:
         return None
 
@@ -1333,16 +1325,23 @@ def bpe_learn_merges(
     re-explode at that size), big ones take the delta path.
     The per-round driver pull is a single row (the argmax pair), the
     same O(1) pull the k-means entries make.
-    Memoized per (session, corpus files+mtimes, plan, k) so the
-    fertility entry reuses the learn pass.  The key is data-aware —
+    Memoized per (SparkContext, corpus files+mtimes, plan, k,
+    strategy) so the fertility entry reuses the learn pass.  The key is data-aware —
     ``inputFiles()`` plus each local file's (mtime_ns, size) — so
     regenerating a fixture under the same path invalidates the cache;
     a DataFrame with no resolvable input files is never cached."""
     if strategy not in ("auto", "delta", "recount"):
         raise ValueError(f"unknown BPE strategy: {strategy!r}")
-    key = _bpe_cache_key(docs, k, text_col)
-    if key is not None and (key, strategy) in _BPE_CACHE:
-        return _BPE_CACHE[(key, strategy)]
+    return memo(
+        docs.sparkSession,
+        _bpe_cache_key(docs, k, text_col, strategy),
+        lambda: _bpe_learn(docs, k, text_col, strategy),
+    )
+
+
+def _bpe_learn(
+    docs: DataFrame, k: int, text_col: str, strategy: str
+) -> list[tuple[int, str, str, str, int]]:
     wc = _bpe_word_counts(docs, text_col).localCheckpoint(eager=True)
     if strategy == "auto":
         # cheap proxy: distinct words (already checkpointed) — distinct
@@ -1405,8 +1404,6 @@ def bpe_learn_merges(
             wc = wc.select(
                 _bpe_merge_expr(F.col("repr"), a, b).alias("repr"), "cnt"
             ).localCheckpoint(eager=True)
-    if key is not None:
-        _BPE_CACHE[(key, strategy)] = merges
     return merges
 
 

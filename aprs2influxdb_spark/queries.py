@@ -24,8 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from aprs2influxdb_spark.functions.counts import corpus_count
-from aprs2influxdb_spark.functions.plancache import table_plan
+from aprs2influxdb_spark.functions.plancache import corpus_count, table_plan
 from aprs2influxdb_spark.functions.partitioning import (
     spread_for_compute,
     spread_for_grouped_compute,
@@ -2949,7 +2948,6 @@ def q_streaming_geo_cells(spark, sf):
     placed where a position firehose (the reference's actual input)
     would run it.  Span derives from the same memoized corpus count as
     the batch side, mirrored by the oracle's params CTE."""
-    from aprs2influxdb_spark.functions.counts import corpus_count
     from aprs2influxdb_spark.operators.geo import (
         CELL_MICRO,
         MICRO,
@@ -3003,7 +3001,6 @@ def q_geo_cell_pairs(spark, sf):
     reported for survivors.  Positions are derived deterministically
     from customer keys (the oracle-gate stand-in for packet
     coordinates)."""
-    from aprs2influxdb_spark.functions.counts import corpus_count
     from aprs2influxdb_spark.operators.geo import (
         geo_cell_pairs,
         span_deg_for,
@@ -8738,9 +8735,10 @@ def q_sequence_pack(spark, sf):
     16-task ceiling) — per-shard state is two integers, and the
     per-group transfer is the narrow (doc_id, len) projection — text
     never moves.  The count comes from a parquet metadata count (a
-    footer walk, parallel and cheap at any scale)."""
+    footer walk, parallel and cheap at any scale), memoized per
+    SparkContext like every scale-derived knob."""
     base = _t(spark, sf, "documents")
-    docs = _pack_projection(base, pack_shards_for(base.count()))
+    docs = _pack_projection(base, pack_shards_for(corpus_count(base)))
     return _pack_apply(docs, _PACK_L)
 
 
@@ -8832,7 +8830,7 @@ def q_bpe_sequence_pack(spark, sf, encoder="auto"):
     merges = ta.bpe_learn_merges(base)
     if encoder == "auto":
         encoder = "expr" if len(merges) <= ta.BPE_EXPR_MAX_MERGES else "pandas"
-    n_shards = pack_shards_for(base.count())
+    n_shards = pack_shards_for(corpus_count(base))
     shard = F.pmod(
         portable_hash64(F.concat(F.lit("pack_"), F.col("doc_id").cast("string"))),
         F.lit(n_shards),
@@ -13361,7 +13359,7 @@ def q_pack_sequences(spark, sf):
     from aprs2influxdb_spark.operators.sampling import pack_sequences
 
     base = _t(spark, sf, "documents")
-    n_buckets = max(_PACK_SEQ_BUCKETS_MIN, base.count() // _PACK_DOCS_PER_SHARD)
+    n_buckets = max(_PACK_SEQ_BUCKETS_MIN, corpus_count(base) // _PACK_DOCS_PER_SHARD)
     return pack_sequences(base, target_tokens=512, n_buckets=n_buckets)
 
 

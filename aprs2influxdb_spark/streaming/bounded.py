@@ -57,7 +57,7 @@ from pyspark.sql.types import (
 
 from aprs2influxdb_spark.functions.partitioning import spread_stream_for_compute
 from aprs2influxdb_spark.functions.rounding import rhu
-from aprs2influxdb_spark.functions.counts import corpus_count
+from aprs2influxdb_spark.functions.plancache import corpus_count
 from aprs2influxdb_spark.queries import normalize_ts
 
 
@@ -384,7 +384,6 @@ def streaming_srp_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     count, matching the batch entry's knob exactly, so the entry
     shares its oracle.  The index-build-at-ingest shape: vectors land
     already routed to their ANN bucket."""
-    from aprs2influxdb_spark.functions.counts import corpus_count
     from aprs2influxdb_spark.operators.similarity import srp_bucket, srp_planes_for
 
     batch = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -789,9 +788,9 @@ def streaming_sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive-CTE oracle verbatim."""
     from aprs2influxdb_spark.queries import _pack_projection, pack_shards_for
 
-    # shard count matches the batch entry's scale-aware knob (a
-    # one-time parquet metadata count of the same table the stream reads)
-    n_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
+    # shard count matches the batch entry's scale-aware knob (the
+    # memoized count of the same table the stream reads)
+    n_docs = corpus_count(spark.read.parquet(f"{sf_dir}/documents.parquet"))
     packed = (
         _pack_projection(stream_docs(spark, sf_dir), pack_shards_for(n_docs))
         .groupBy("shard")

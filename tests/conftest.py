@@ -42,6 +42,37 @@ def started_queries(monkeypatch):
 
 
 @pytest.fixture()
+def fresh_memo(spark, monkeypatch):
+    """An empty driver memo for the test: the context's ``plancache.memo``
+    entries are set aside and come back when the test ends, so every
+    value the test asks for is built afresh first."""
+    from aprs2influxdb_spark.functions import plancache
+
+    monkeypatch.delitem(
+        spark.sparkContext.__dict__, plancache._MEMO_ATTR, raising=False
+    )
+
+
+@pytest.fixture()
+def count_jobs(fresh_memo, monkeypatch):
+    """Every ``DataFrame.count`` call during the test, in call order,
+    against an empty driver memo: a spy on ``DataFrame.count`` keeps
+    each counted frame, so a count the memo serves shows up as no call
+    at all."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    counted = []
+    real = DataFrame.count
+
+    def count(self):
+        counted.append(self)
+        return real(self)
+
+    monkeypatch.setattr(DataFrame, "count", count)
+    return counted
+
+
+@pytest.fixture()
 def gate_shards(monkeypatch):
     """``n_shards`` of every ``bounded.sharded_bucket_gate`` call during
     the test, in call order.  The bounded builders and the image and

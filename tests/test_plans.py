@@ -519,13 +519,16 @@ class TestJoinStrategy:
 
 
 class TestCountMemo:
-    def test_derived_knob_entries_share_one_count_job(self, spark, sf_dir):
+    def test_derived_knob_entries_share_one_count_job(
+        self, spark, sf_dir, count_jobs, monkeypatch
+    ):
         """Composed ANN pipelines must pay at most ONE corpus count for
         knob derivation (round-2 verdict #1): cosine_near_dup,
         knn_graph, semantic_dedup and srp_buckets all scale-derive
-        their knobs from the same embeddings corpus — building all four
-        must record exactly one cache miss and reuse it thereafter."""
-        from aprs2influxdb_spark.functions import counts
+        their knobs from the same embeddings corpus — each must look
+        up the one shared count entry, the four must run exactly one
+        count job between them, and a rebuild runs none."""
+        from aprs2influxdb_spark.functions import plancache
         from aprs2influxdb_spark.queries import (
             q_cosine_near_dup,
             q_knn_graph,
@@ -533,26 +536,43 @@ class TestCountMemo:
             q_srp_buckets,
         )
 
-        counts.clear_count_cache()
-        for b in (q_cosine_near_dup, q_knn_graph, q_semantic_dedup, q_srp_buckets):
+        lookups = []
+        real = plancache.memo
+
+        def memo(spark, key, build):
+            if key is not None and key[0] == "count":
+                lookups.append(key)
+            return real(spark, key, build)
+
+        monkeypatch.setattr(plancache, "memo", memo)
+        builders = (q_cosine_near_dup, q_knn_graph, q_semantic_dedup, q_srp_buckets)
+        per_builder = []
+        for b in builders:
+            before = len(lookups)
             b(spark, sf_dir)  # knobs derive at plan-build time
-        assert counts.stats["misses"] == 1, counts.stats
-        assert counts.stats["hits"] >= 3, counts.stats
-        assert counts.stats["uncached"] == 0, counts.stats
+            per_builder.append(len(lookups) - before)
+        assert all(per_builder), per_builder
+        assert len(set(lookups)) == 1, set(lookups)
+        assert len(count_jobs) == 1, count_jobs
+        for b in builders:
+            b(spark, sf_dir)
+        assert len(count_jobs) == 1, count_jobs
 
-    def test_corpus_count_semantics(self, spark, sf_dir):
-        """Explicit n short-circuits (no job); filtered plans don't
-        share cache entries with the unfiltered scan."""
-        from aprs2influxdb_spark.functions import counts
+    def test_corpus_count_semantics(self, spark, sf_dir, count_jobs):
+        """Explicit n short-circuits (no job); a re-read of the same
+        table shares its entry; filtered plans don't share entries
+        with the unfiltered scan."""
+        from aprs2influxdb_spark.functions.plancache import corpus_count
 
-        counts.clear_count_cache()
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        assert counts.corpus_count(emb, n=42) == 42
-        assert counts.stats == {"hits": 0, "misses": 0, "uncached": 0}
-        full = counts.corpus_count(emb)
-        part = counts.corpus_count(emb.filter(F.col("vec_id") < 10))
+        path = f"{sf_dir}/embeddings.parquet"
+        emb = spark.read.parquet(path)
+        assert corpus_count(emb, n=42) == 42
+        assert count_jobs == []
+        full = corpus_count(emb)
+        part = corpus_count(emb.filter(F.col("vec_id") < 10))
         assert part == 10 and full > part
-        assert counts.stats["misses"] == 2
+        assert corpus_count(spark.read.parquet(path)) == full
+        assert len(count_jobs) == 2
 
 
 class TestPacketTableLayout:

@@ -501,19 +501,15 @@ class TestBPE:
                 cur = {w: r.replace(pat, rep) for w, r in cur.items()}
         return merges, cur, wc
 
-    def test_learn_matches_pure_python_reference(self, spark, sf_dir):
+    def test_learn_matches_pure_python_reference(self, spark, sf_dir, fresh_memo):
         """The distributed plan (weighted pair aggregation, argmax
         pull, checkpointed vocab rounds) must reproduce the
         single-process algorithm exactly on the real corpus."""
-        from aprs2influxdb_spark.operators.textanalysis import (
-            _BPE_CACHE,
-            bpe_learn_merges,
-        )
+        from aprs2influxdb_spark.operators.textanalysis import bpe_learn_merges
 
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
         texts = [r["text"] for r in docs.select("text").collect()]
         want, _, _ = self._ref_learn(texts, 6)
-        _BPE_CACHE.clear()
         got = bpe_learn_merges(docs, 6)
         assert got == want
         # memoized: the second call must return the cached object
@@ -554,7 +550,9 @@ class TestBPE:
         }
         assert got == want
 
-    def test_delta_strategy_identical_and_scans_less(self, spark, sf_dir):
+    def test_delta_strategy_identical_and_scans_less(
+        self, spark, sf_dir, fresh_memo
+    ):
         """Round-6 (verdict-r5 item 6): the delta-maintained learner
         must produce the IDENTICAL merge list to the
         recount-from-scratch shape on the real corpus (delta upkeep is
@@ -563,7 +561,6 @@ class TestBPE:
         must be strictly below the recount shape's k full-vocab scans
         (the scan-count audit the verdict asked for)."""
         from aprs2influxdb_spark.operators.textanalysis import (
-            _BPE_CACHE,
             _bpe_merge_expr,
             _bpe_pair_counts,
             _bpe_word_counts,
@@ -572,7 +569,6 @@ class TestBPE:
         )
 
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        _BPE_CACHE.clear()
         recount = bpe_learn_merges(docs, 6, strategy="recount")
         delta = bpe_learn_merges(docs, 6, strategy="delta")
         assert delta == recount and len(delta) == 6
@@ -689,16 +685,12 @@ class TestBPEDegenerateParity:
         tiny corpus; return both (lang → (n_words, bpe_per_word))."""
         import duckdb
 
-        from aprs2influxdb_spark.operators.textanalysis import (
-            _BPE_CACHE,
-            bpe_fertility,
-        )
+        from aprs2influxdb_spark.operators.textanalysis import bpe_fertility
         from aprs2influxdb_spark.queries import _bpe_fertility_sql
 
         docs = spark.createDataFrame(rows, "doc_id long, lang string, text string")
         path = str(tmp_path / "documents.parquet")
         docs.coalesce(1).write.mode("overwrite").parquet(path)
-        _BPE_CACHE.clear()
         got = {
             r["lang"]: (r["n_words"], r["bpe_per_word"])
             for r in bpe_fertility(spark.read.parquet(path)).collect()

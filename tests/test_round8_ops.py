@@ -554,7 +554,9 @@ class TestBroadcastCalibration:
         assert n_batches == len(rows)
         return handler.lines(), jobs
 
-    def test_cli_broadcast_sink_end_to_end(self, spark, tmp_path, monkeypatch, http_server):
+    def test_cli_broadcast_sink_end_to_end(
+        self, spark, tmp_path, monkeypatch, http_server, fresh_memo
+    ):
         """cli.py's default path: packet stream -> broadcast-dim
         foreachBatch sink -> HTTP lines on a live stub, over two
         micro-batches.  The stub receives exactly the batch oracle's
@@ -566,7 +568,6 @@ class TestBroadcastCalibration:
         ``field_exprs`` is built once across the two batches."""
         import datetime
 
-        from aprs2influxdb_spark.functions import plancache
         from aprs2influxdb_spark.operators import projections
         from aprs2influxdb_spark.operators.calibration import with_effective_equations
         from aprs2influxdb_spark.sources.aprsis import decode_frames
@@ -589,7 +590,6 @@ class TestBroadcastCalibration:
         ]
         schema = "raw string, ingest_ts timestamp"
 
-        spark.sparkContext.__dict__.pop(plancache._COLUMN_ATTR, None)
         built = []
         real = projections.field_exprs
         monkeypatch.setattr(
@@ -643,8 +643,8 @@ class TestBroadcastCalibration:
         assert written == [f"batch {b}: 1 lines written" for b in range(3)]
 
 
-def test_column_memo_builds_once_under_concurrent_misses():
-    """Threads that miss the same ``column_memo`` key at once (a stream's
+def test_memo_builds_once_under_concurrent_misses():
+    """Threads that miss the same ``memo`` key at once (a stream's
     batch thread and a driver thread) run one build between them and
     all get its result."""
     import sys
@@ -652,7 +652,7 @@ def test_column_memo_builds_once_under_concurrent_misses():
     import time
     import types
 
-    from aprs2influxdb_spark.functions.plancache import column_memo
+    from aprs2influxdb_spark.functions.plancache import memo
 
     spark = types.SimpleNamespace(sparkContext=types.SimpleNamespace())
     builds, got = [], []
@@ -663,7 +663,7 @@ def test_column_memo_builds_once_under_concurrent_misses():
         return object()
 
     threads = [
-        threading.Thread(target=lambda: got.append(column_memo(spark, ("k",), build)))
+        threading.Thread(target=lambda: got.append(memo(spark, ("k",), build)))
         for _ in range(16)
     ]
     old = sys.getswitchinterval()
@@ -769,6 +769,20 @@ class TestSequencePack:
                 assert r["pack_offset"] == used, (shard, r)
                 used += r["len"]
                 assert used <= _PACK_L
+
+    @pytest.mark.parametrize(
+        "entry", ["sequence_pack", "bpe_sequence_pack", "pack_sequences"]
+    )
+    def test_rebuild_runs_no_count_job(self, spark, sf_dir, count_jobs, entry):
+        """The scale-derived shard/lane count is memoized: building the
+        entry again runs no count job."""
+        from aprs2influxdb_spark.queries import registry
+
+        build = registry()[entry][0]
+        build(spark, sf_dir)
+        del count_jobs[:]
+        build(spark, sf_dir)
+        assert count_jobs == []
 
     def test_pack_efficiency_bounds(self, spark, sf_dir):
         from aprs2influxdb_spark.queries import _PACK_L, registry

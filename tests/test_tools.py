@@ -1,9 +1,11 @@
 """The measurement harness (``bench.py``) and the scripts in ``tools/``:
 every script still imports against the current package, and
-``bench.run`` times any registry entries without touching BENCH.json."""
+``bench.run`` times any registry entries without touching BENCH.json.
+Also a source scan that keeps module-level caches out of the package."""
 
 from __future__ import annotations
 
+import ast
 import importlib.util
 import json
 from pathlib import Path
@@ -25,6 +27,44 @@ def _load(path: Path):
 def test_script_imports(path, monkeypatch):
     monkeypatch.chdir(ROOT)  # sweep.py imports the tests package from the cwd
     _load(path)  # runs the module body, not its entry point
+
+
+def _empty_container(node: ast.expr) -> bool:
+    if isinstance(node, ast.Dict):
+        return not node.keys
+    if isinstance(node, ast.List):
+        return not node.elts
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Name)
+        and node.func.id in ("dict", "list", "set")
+        and not node.args
+        and not node.keywords
+    )
+
+
+def test_no_module_level_caches():
+    """No package module binds a module-level name to an empty ``{}``,
+    ``[]``, ``set()``, ``dict()`` or ``list()`` — the shape of a
+    process-global cache, which outlives its JVM and needs clearing by
+    hand.  Driver-derived state goes through ``plancache.memo`` (per
+    SparkContext) or ``plancache.table_plan`` (per session)."""
+    found = []
+    for path in sorted((ROOT / "aprs2influxdb_spark").rglob("*.py")):
+        for stmt in ast.parse(path.read_text()).body:
+            if isinstance(stmt, ast.Assign):
+                targets = stmt.targets
+            elif isinstance(stmt, ast.AnnAssign) and stmt.value is not None:
+                targets = [stmt.target]
+            else:
+                continue
+            if _empty_container(stmt.value):
+                found += [
+                    f"{path.relative_to(ROOT)}:{stmt.lineno} {t.id}"
+                    for t in targets
+                    if isinstance(t, ast.Name)
+                ]
+    assert found == []
 
 
 def test_bench_run_any_entries(spark, sf_dir):
