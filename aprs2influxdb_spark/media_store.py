@@ -21,9 +21,9 @@ corpus-preparation backfill has; nothing is collected to the driver.
 
 Cache invariants: the directory name embeds ``MEDIA_VERSION`` (bump
 when any synthesis closed-form changes — stale caches are simply
-orphaned) and the sf directory's basename; writes go to a temp dir
-then ``os.rename`` so a crashed build can never be mistaken for a
-complete one.
+orphaned) and the sf directory's basename; ``storage.build_once``
+writes to a temp dir then ``os.rename``s it into place, so a crashed
+build can never be mistaken for a complete one.
 
 Reference parity note: the reference (aprs2influxdb) has no media
 path at all (README.md:4); this serves SURVEY §2.9's multimodal
@@ -37,6 +37,8 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+
+from aprs2influxdb_spark.storage import attach_bucketed, build_once, write_bucketed
 
 MEDIA_VERSION = 2  # v2: warc shard-file count scales with the corpus
 N_WARC_SHARDS = 8  # MINIMUM files for the binaryFile-source entry
@@ -244,32 +246,6 @@ def domain_dim_path(sf_dir: str) -> str:
     )
 
 
-def _build_once(spark: SparkSession, final: str, write) -> str:
-    """Build the store at ``final`` once and return its path: a
-    ``_SUCCESS`` marker means built; otherwise ``write(tmp)`` fills a
-    per-process temp dir that is renamed into place, so a crashed
-    build can never be mistaken for a complete one."""
-    if os.path.exists(os.path.join(final, "_SUCCESS")):
-        return final
-    # about to (re)build: drop any stale plan handle cached for this
-    # path in THIS session (ADVICE r11 — the plan cache pins schema +
-    # file listing at first read and must not survive a rebuild)
-    from aprs2influxdb_spark.functions.plancache import invalidate_path
-
-    invalidate_path(spark, final)
-    tmp = f"{final}.tmp{os.getpid()}"
-    write(tmp)
-    os.makedirs(os.path.dirname(final), exist_ok=True)
-    try:
-        os.rename(tmp, final)
-    except OSError:
-        # lost a benign race: another session built it first
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not os.path.exists(os.path.join(final, "_SUCCESS")):
-            raise
-    return final
-
-
 def _ensure_blob_store(
     spark: SparkSession, sf_dir: str, final: str, col: str, classes_for, synth
 ) -> str:
@@ -303,7 +279,7 @@ def _ensure_blob_store(
             "overwrite"
         ).parquet(tmp)
 
-    return _build_once(spark, final, write)
+    return build_once(spark, final, write)
 
 
 # the maintained domain-quality/blocklist dimension: 40 hosts starting
@@ -365,22 +341,13 @@ def ensure_prev_snapshot(spark: SparkSession, sf_dir: str) -> str:
     snapshot: at 100 TB both snapshot digest stores are bucketed on
     doc_id, so the diff join shuffles at most the non-bucketed side
     (here: only the current side's one exchange of 24-byte rows).
-    The epoch_state ``_attach_bucketed`` discipline: saveAsTable
-    metadata does not survive a new session, so CREATE TABLE with the
-    matching CLUSTERED BY spec re-attaches the files."""
+    Built by ``storage.build_once`` and registered by
+    ``storage.attach_bucketed``, like every persisted bucketed store."""
     from pyspark.sql import functions as F
 
     from aprs2influxdb_spark.functions.hashing import portable_hash64
 
-    final = prev_snapshot_path(sf_dir)
-    name = (
-        f"prev_snapshot{PREV_SNAPSHOT_REV}_"
-        + _sf_key(sf_dir).replace(".", "_").replace("-", "_")
-    )
-
     def write(tmp):
-        from aprs2influxdb_spark.storage import write_bucketed
-
         docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
             "doc_id", "text"
         )
@@ -409,23 +376,15 @@ def ensure_prev_snapshot(spark: SparkSession, sf_dir: str) -> str:
                 "text_md5"
             ),
         )
-        write_bucketed(
-            kept.unionByName(gone), name, PREV_SNAPSHOT_BUCKETS, "doc_id", path=tmp
-        )
-        spark.sql(f"DROP TABLE IF EXISTS {name}")  # re-point at the final path
+        write_bucketed(kept.unionByName(gone), tmp, PREV_SNAPSHOT_BUCKETS, "doc_id")
 
-    _build_once(spark, final, write)
-    if not spark.catalog.tableExists(name):
-        schema = spark.read.parquet(final).schema
-        cols = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
-        )
-        spark.sql(
-            f"CREATE TABLE {name} ({cols}) USING parquet "
-            f"CLUSTERED BY (doc_id) SORTED BY (doc_id) "
-            f"INTO {PREV_SNAPSHOT_BUCKETS} BUCKETS LOCATION '{final}'"
-        )
-    return name
+    return attach_bucketed(
+        spark,
+        f"prev_snapshot{PREV_SNAPSHOT_REV}_{_sf_key(sf_dir)}",
+        build_once(spark, prev_snapshot_path(sf_dir), write),
+        "doc_id",
+        PREV_SNAPSHOT_BUCKETS,
+    )
 
 
 def ensure_domain_dim(spark: SparkSession, sf_dir: str) -> str:
@@ -470,7 +429,7 @@ def ensure_domain_dim(spark: SparkSession, sf_dir: str) -> str:
         )
         dim.coalesce(1).write.mode("overwrite").parquet(tmp)
 
-    return _build_once(spark, domain_dim_path(sf_dir), write)
+    return build_once(spark, domain_dim_path(sf_dir), write)
 
 
 def _gen_schema():
@@ -760,7 +719,7 @@ def ensure_media(spark: SparkSession, sf_dir: str) -> str:
             .parquet(tmp)
         )
 
-    return _build_once(spark, media_path(sf_dir), write)
+    return build_once(spark, media_path(sf_dir), write)
 
 
 def media_table(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
@@ -858,4 +817,4 @@ def _ensure_member_files(spark: SparkSession, sf_dir: str, final: str, synth) ->
         with open(os.path.join(tmp, "_SUCCESS"), "w"):
             pass
 
-    return _build_once(spark, final, write)
+    return build_once(spark, final, write)

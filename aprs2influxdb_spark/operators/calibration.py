@@ -20,9 +20,10 @@ monotonic ingest id) — deterministic and testable.
 Scale: the shuffle is ``hash(from_call)`` — the engine's only wide
 dependency on the packet path.  State per key is 15 doubles, so skew
 is bounded by the hottest callsign's row count; AQE skew-join/salting
-is unnecessary because this is a window, not a join.  The compacted
-dimension variant (``compact_equations`` + broadcast join) avoids even
-that shuffle when calibration freshness within the batch is not needed.
+is unnecessary because this is a window, not a join.  The daemon's
+streaming form (``streaming.calibration.BroadcastCalibrator``) avoids
+even that shuffle: it folds each batch's equations into a compacted
+per-callsign dimension and broadcast-joins it.
 """
 
 from __future__ import annotations
@@ -53,18 +54,6 @@ def with_effective_equations(
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return packets.withColumn(out_col, F.last(F.col("tEQNS"), ignorenulls=True).over(w))
-
-
-def compact_equations(packets: DataFrame, order_col: str = "ingest_ts") -> DataFrame:
-    """J2 batch compaction: latest tEQNS per callsign (last-write-wins,
-    :993) as a small dimension — broadcast-joinable against any packet
-    table (state is 5×3 doubles per callsign; at 100 TB of packets this
-    is still O(#callsigns) ≈ MBs)."""
-    eqn_rows = packets.filter(F.col("tEQNS").isNotNull())
-    return (
-        eqn_rows.groupBy("from_call")
-        .agg(F.max_by("tEQNS", F.col(order_col)).alias("tEQNS"), F.max(order_col).alias("eff_ts"))
-    )
 
 
 def asof_join(

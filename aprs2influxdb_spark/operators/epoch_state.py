@@ -31,13 +31,14 @@ Persistence schema (all parquet, under one epoch directory)::
         num_hashes INT, bands INT, shingle_n INT, eval_mod INT,
         n_planes INT, srp_seed INT, n_centroids INT
 
-Scale notes (round 8, verdict-r7 item 6 — the layout this docstring
-previously only promised): the three probe-joined tables ARE written
-bucketed on their join keys — shingles on (doc_id), lsh_bands on
-(band, key), semantic_index on (c_id, bucket) — via the
-``storage.write_bucketed`` precedent, and ``load_contamination_state``
-re-attaches them to a fresh session's catalog so the planner sees the
-layout.  A batch rescreen therefore shuffles ONLY the batch: every
+Scale notes: the three probe-joined tables are written bucketed
+(``EPOCH_BUCKETS`` buckets) on their join keys — shingles on (doc_id),
+lsh_bands on (band, key), semantic_index on (c_id, bucket) — by
+``storage.write_bucketed``, and ``load_contamination_state``
+registers them in the session's catalog through
+``storage.attach_bucketed`` (the layout every persisted bucketed
+store shares) so the planner sees the bucketing.  A batch rescreen
+therefore shuffles ONLY the batch: every
 epoch-table scan in the probe plan reports ``Bucketed: true``
 (pinned in ``tests/test_round8_ops.py::TestEpochStateBucketing``),
 and the frozen-batch joins deliberately probe index and batch as two
@@ -59,7 +60,7 @@ from pyspark.sql import functions as F
 
 from aprs2influxdb_spark.functions.hashing import portable_hash64
 from aprs2influxdb_spark.functions.plancache import corpus_count
-from aprs2influxdb_spark.storage import write_bucketed
+from aprs2influxdb_spark.storage import attach_bucketed, write_bucketed
 from aprs2influxdb_spark.operators.dedup import (
     _lsh_index,
     lsh_rescreen_from_state,
@@ -83,39 +84,27 @@ def _epoch_table_name(path: str, table: str) -> str:
     return f"epoch_{h}_{table}"
 
 
+EPOCH_BUCKETS = 16  # buckets per probe-joined epoch table
+
 _BUCKET_KEYS = {
     # probe-join keys per table: a batch rescreen joins lsh_bands on
     # (band, key), semantic_index on (c_id, bucket), and verifies
     # candidates against shingles on the doc id — bucketing each table
     # on ITS join key means the scan itself satisfies the join's
     # partitioning requirement: the saved corpus never shuffles, only
-    # the batch does (round 8, verdict-r7 item 6; the docstring's
-    # promised layout)
+    # the batch does
     "shingles": ["doc_id"],
     "lsh_bands": ["band", "key"],
     "semantic_index": ["c_id", "bucket"],
 }
 
 
-def _attach_bucketed(spark: SparkSession, path: str, table: str, n_buckets: int) -> str:
-    """(Re-)register the external bucketed table for a saved epoch in
-    THIS session's catalog (saveAsTable metadata does not survive a
-    new session without a persistent metastore) and return its name.
-    The files carry their bucket ids in their names; CREATE TABLE
-    with the matching CLUSTERED BY spec re-attaches them."""
-    name = _epoch_table_name(path, table)
-    if spark.catalog.tableExists(name):
-        return name
-    loc = f"{path}/{table}"
-    schema = spark.read.parquet(loc).schema
-    cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields)
-    keys = ", ".join(_BUCKET_KEYS[table])
-    spark.sql(
-        f"CREATE TABLE {name} ({cols}) USING parquet "
-        f"CLUSTERED BY ({keys}) SORTED BY ({keys}) INTO {n_buckets} BUCKETS "
-        f"LOCATION '{loc}'"
-    )
-    return name
+def _write_bucketed(df: DataFrame, path: str, table: str) -> None:
+    """Write one probe-joined table of the epoch at ``path`` and drop
+    its catalog entry, so the next load attaches the new files rather
+    than a file listing the overwrite deleted."""
+    write_bucketed(df, f"{path}/{table}", EPOCH_BUCKETS, _BUCKET_KEYS[table])
+    df.sparkSession.sql(f"DROP TABLE IF EXISTS {_epoch_table_name(path, table)}")
 
 
 def persist_contamination_state(
@@ -125,7 +114,7 @@ def persist_contamination_state(
     num_hashes: int = 16, bands: int = 4, shingle_n: int = 3,
     eval_mod: int = 20, eval_salt: str = "eval",
     n_planes: int | None = None, n_centroids: int | None = None,
-    srp_seed: int = 7, n_buckets: int = 16,
+    srp_seed: int = 7,
 ) -> None:
     """Build the epoch's contamination/dedup state from the corpus
     and write every table of the schema above.  One shingle pass
@@ -135,8 +124,7 @@ def persist_contamination_state(
     The three probe-joined tables (shingles / lsh_bands /
     semantic_index) are written BUCKETED on their join keys (see
     ``_BUCKET_KEYS``) so every later rescreen shuffles only the
-    batch; pass ``n_buckets=0`` for plain parquet (the pre-round-8
-    layout, still loadable)."""
+    batch."""
     spark = docs.sparkSession
     n = corpus_count(emb, None)
     if n_planes is None:
@@ -144,18 +132,9 @@ def persist_contamination_state(
     if n_centroids is None:
         n_centroids = ivf_centroids_for(n)
 
-    def _write(df: DataFrame, table: str) -> None:
-        if n_buckets > 0:
-            write_bucketed(
-                df, _epoch_table_name(path, table), n_buckets,
-                _BUCKET_KEYS[table], path=f"{path}/{table}",
-            )
-        else:
-            df.write.mode("overwrite").parquet(f"{path}/{table}")
-
     arr, banded = _lsh_index(docs, text_col, id_col, num_hashes, bands, shingle_n)
-    _write(arr, "shingles")
-    _write(banded, "lsh_bands")
+    _write_bucketed(arr, path, "shingles")
+    _write_bucketed(banded, path, "lsh_bands")
 
     eval_hash = F.pmod(
         portable_hash64(
@@ -175,30 +154,31 @@ def persist_contamination_state(
     bucketed = assign.withColumn(
         "bucket", srp_bucket("v", n_planes, srp_seed)
     ).withColumn("nrm", _norm(F.col("v")))
-    _write(bucketed, "semantic_index")
+    _write_bucketed(bucketed, path, "semantic_index")
     cent.write.mode("overwrite").parquet(f"{path}/centroids")
 
     spark.createDataFrame(
         [(num_hashes, bands, shingle_n, eval_mod, n_planes, srp_seed,
-          n_centroids, n_buckets)],
+          n_centroids)],
         "num_hashes int, bands int, shingle_n int, eval_mod int, "
-        "n_planes int, srp_seed int, n_centroids int, n_buckets int",
+        "n_planes int, srp_seed int, n_centroids int",
     ).write.mode("overwrite").parquet(f"{path}/meta")
 
 
 def load_contamination_state(spark: SparkSession, path: str) -> dict:
     """Reload a persisted epoch: DataFrames for the five tables plus
-    the meta parameters as plain Python values.  Bucketed epochs
-    (``meta.n_buckets > 0``) are read through re-attached catalog
-    tables so the bucket layout reaches the planner; pre-round-8
-    epochs (no ``n_buckets`` column) fall back to plain parquet."""
+    the meta parameters as plain Python values.  The three bucketed
+    tables are read through this session's catalog so the bucket
+    layout reaches the planner."""
     meta = spark.read.parquet(f"{path}/meta").collect()[0].asDict()
-    n_buckets = meta.get("n_buckets", 0) or 0
 
     def _read(table: str) -> DataFrame:
-        if n_buckets > 0 and table in _BUCKET_KEYS:
-            return spark.table(_attach_bucketed(spark, path, table, n_buckets))
-        return spark.read.parquet(f"{path}/{table}")
+        return spark.table(
+            attach_bucketed(
+                spark, _epoch_table_name(path, table), f"{path}/{table}",
+                _BUCKET_KEYS[table], EPOCH_BUCKETS,
+            )
+        )
 
     return {
         "shingles": _read("shingles"),
@@ -528,19 +508,8 @@ def epoch_merge(
         st["lsh_bands"].join(F.broadcast(upd), id_col, "left_anti")
         .unionByName(add_banded)
     )
-    n_buckets = meta.get("n_buckets", 0) or 0
-
-    def _write(df: DataFrame, table: str) -> None:
-        if n_buckets > 0:
-            write_bucketed(
-                df, _epoch_table_name(out_path, table), n_buckets,
-                _BUCKET_KEYS[table], path=f"{out_path}/{table}",
-            )
-        else:
-            df.write.mode("overwrite").parquet(f"{out_path}/{table}")
-
-    _write(arr, "shingles")
-    _write(banded, "lsh_bands")
+    _write_bucketed(arr, out_path, "shingles")
+    _write_bucketed(banded, out_path, "lsh_bands")
 
     merged_arr = spark.read.parquet(f"{out_path}/shingles")
     eval_hash = F.pmod(
@@ -573,7 +542,7 @@ def epoch_merge(
             .withColumn("nrm", _norm(F.col("v")))
             .select(*sem.columns)
         )
-    _write(sem, "semantic_index")
+    _write_bucketed(sem, out_path, "semantic_index")
     st["centroids"].write.mode("overwrite").parquet(f"{out_path}/centroids")
     spark.read.parquet(f"{path}/meta").write.mode("overwrite").parquet(
         f"{out_path}/meta"

@@ -1855,10 +1855,10 @@ SELECT query_id, neighbor_id, cos_sim, rk FROM (
 
 
 def persist_ivf_index(
-    emb: DataFrame, table: str, buckets: int = 16,
+    emb: DataFrame, table: str, path: str, buckets: int = 16,
     n_centroids: int | None = None,
     id_col: str = "vec_id", vec_col: str = "embedding",
-    path: str | None = None, n: int | None = None,
+    n: int | None = None,
 ) -> None:
     """Persist the IVF inverted lists as a BUCKETED table on the
     centroid id — the index-serving layout: build once, probe many.
@@ -1868,19 +1868,22 @@ def persist_ivf_index(
     the partitioning requirement), so serving a query moves only the
     broadcast probe rows — the property that makes an ANN index a
     100 TB *index* rather than a recomputation (pinned in
-    tests/test_plans.py).  Centroids persist beside the lists as
-    ``<table>_centroids`` (broadcast-sized by construction)."""
-    from aprs2influxdb_spark.storage import write_bucketed
+    tests/test_plans.py).  The lists are written under ``path`` and
+    registered as ``table``, replacing any earlier index of that name;
+    centroids persist beside them as ``<table>_centroids``
+    (broadcast-sized by construction)."""
+    from aprs2influxdb_spark.storage import attach_bucketed, write_bucketed
 
+    spark = emb.sparkSession
     cent, assign = ivf_assignments(emb, n_centroids, id_col, vec_col, n=n)
     write_bucketed(
-        assign.select(id_col, "v", "c_id"), table, buckets, "c_id",
-        path=path and f"{path}/lists",
+        assign.select(id_col, "v", "c_id"), f"{path}/lists", buckets, "c_id"
     )
-    cw = cent.write.format("parquet").mode("overwrite")
-    if path:
-        cw = cw.option("path", f"{path}/centroids")
-    cw.saveAsTable(f"{table}_centroids")
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    attach_bucketed(spark, table, f"{path}/lists", "c_id", buckets)
+    cent.write.format("parquet").mode("overwrite").option(
+        "path", f"{path}/centroids"
+    ).saveAsTable(f"{table}_centroids")
 
 
 def ivf_topk_from_index(

@@ -93,24 +93,6 @@ GROUP BY {groups}
 """
 
 
-def hll_distinct(
-    df: DataFrame,
-    key_col: str = "user_id",
-    group_cols: Sequence[str] = ("event_type",),
-    rsd: float = 0.01,
-    out_col: str = "approx_users",
-) -> DataFrame:
-    """Engine-native HyperLogLog++ distinct — the production fast path
-    (no md5, denser sketch).  Not oracle-checkable: DuckDB's
-    approx_count_distinct uses a different sketch, so values
-    legitimately differ; error bounds are pinned in
-    tests/test_robustness.py instead."""
-    return (
-        df.groupBy(*group_cols)
-        .agg(F.approx_count_distinct(key_col, rsd).alias(out_col))
-    )
-
-
 def _hll_constants(p: int) -> tuple[int, float]:
     """(m, numerator) for the HLL estimate: numerator = α_m · m² ·
     2^51, computed ONCE in Python and embedded as the identical double
@@ -148,7 +130,7 @@ def hll_portable(
     df: DataFrame, key_col: str, p: int = 9,
 ) -> DataFrame:
     """Register-array HyperLogLog with the portable md5 hash — the
-    oracle-exact twin of the engine-native :func:`hll_distinct`.
+    oracle-exact twin of Spark's native ``approx_count_distinct``.
 
     Determinism notes (why this hashes to the same value on Spark and
     DuckDB): bucket = h mod m and rest = h div m are int64; the rank

@@ -1756,9 +1756,7 @@ def q_approx_distinct(spark, sf):
     KMV (bottom-k) sketch: both engines hash through the shared md5
     portable_hash64 and apply the identical estimator, so the result is
     cross-engine exact while staying genuinely approximate
-    (k=64 → ~13% rsd; q_distinct_daily_users is the exact-count twin).
-    The engine-native HLL fast path lives in operators.sketches
-    .hll_distinct with error bounds pinned in tests/test_robustness.py."""
+    (k=64 → ~13% rsd; q_distinct_daily_users is the exact-count twin)."""
     from aprs2influxdb_spark.operators.sketches import kmv_distinct
 
     return kmv_distinct(_t(spark, sf, "events"), key_col="user_id", group_cols=("event_type",), k=64)
@@ -3482,8 +3480,8 @@ FROM wq
 
 def q_hll_sketch(spark, sf):
     """PORTABLE HyperLogLog (Flajolet et al. 2007) under the exact
-    oracle gate — unlike ``approx_distinct``'s KMV and the engine-
-    native ``hll_distinct``, this is the register-array HLL itself,
+    oracle gate — unlike ``approx_distinct``'s KMV and Spark's
+    native ``approx_count_distinct``, this is the register-array HLL itself,
     built from expressions both engines evaluate identically: bucket
     = h mod 2^p, rank = trailing-zero count of the remaining 51 bits
     (capped so the 2^(51−M_j) register terms stay exact int64), the
@@ -9832,6 +9830,7 @@ def q_streaming_image_near_dup(spark, sf, drained: bool = False):
     if drained:
         from aprs2influxdb_spark.media_store import IMAGE_VERSION, _sf_key
         from aprs2influxdb_spark.streaming.bounded import (
+            bucket_index_of,
             persist_gate_index,
             probe_gate_index,
         )
@@ -9841,12 +9840,7 @@ def q_streaming_image_near_dup(spark, sf, drained: bool = False):
         split = (int(lo) + int(hi)) // 2
         index = persist_gate_index(
             spark,
-            bands_of(batch.filter(F.col("doc_id") <= split))
-            .groupBy("key")
-            .agg(
-                F.min("doc_id").alias("p_first"),
-                F.max("doc_id").alias("p_last"),
-            ),
+            bucket_index_of(bands_of(batch.filter(F.col("doc_id") <= split))),
             # the index derives from the image STORE, so its cache key
             # carries the store's version: a store rev invalidates it
             f"img{IMAGE_VERSION}-{_sf_key(sf)}",
@@ -10453,6 +10447,7 @@ def q_streaming_video_near_dup(spark, sf, drained: bool = False):
     if drained:
         from aprs2influxdb_spark.media_store import VIDEO_VERSION, _sf_key
         from aprs2influxdb_spark.streaming.bounded import (
+            bucket_index_of,
             persist_gate_index,
             probe_gate_index,
         )
@@ -10462,12 +10457,7 @@ def q_streaming_video_near_dup(spark, sf, drained: bool = False):
         split = (int(lo) + int(hi)) // 2
         index = persist_gate_index(
             spark,
-            bands_of(batch.filter(F.col("doc_id") <= split))
-            .groupBy("key")
-            .agg(
-                F.min("doc_id").alias("p_first"),
-                F.max("doc_id").alias("p_last"),
-            ),
+            bucket_index_of(bands_of(batch.filter(F.col("doc_id") <= split))),
             f"vid{VIDEO_VERSION}-{_sf_key(sf)}",
         )
         src = src.filter(F.col("doc_id") > split)

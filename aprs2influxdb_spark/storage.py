@@ -21,6 +21,9 @@ partition count stays sane (10 × days) — no small-file explosion; the
 
 from __future__ import annotations
 
+import os
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -76,12 +79,12 @@ def read_packets(spark: SparkSession, path: str) -> DataFrame:
 
 def write_bucketed(
     df: DataFrame,
-    table: str,
+    path: str,
     buckets: int,
     key: str | list[str] | tuple[str, ...],
-    path: str | None = None,
 ) -> None:
-    """Write ``df`` as a bucketed (and bucket-sorted) table on ``key``.
+    """Write ``df`` at ``path`` as parquet files bucketed (and
+    bucket-sorted) on ``key``.
 
     Bucketing is the shuffle-you-pay-once strategy for 100 TB repeat
     joins: both sides of a fact-fact join (lineitem⋈orders on the
@@ -93,19 +96,82 @@ def write_bucketed(
     ``sortBy`` additionally pre-sorts each bucket file so sort-merge
     joins skip their sorts.
 
-    Bucket metadata lives in the catalog, hence ``saveAsTable``; with
-    ``path`` the table is external (data at the given location, only
-    metadata in the catalog)."""
+    Spark writes bucket files only through ``saveAsTable``, so the
+    write goes through a scratch catalog entry that is dropped again
+    (dropping an external table keeps its files).  The files carry
+    their bucket ids in their names; :func:`attach_bucketed` is what
+    registers them with a session's planner."""
+    import uuid
+
     keys = [key] if isinstance(key, str) else list(key)
-    w = (
+    scratch = f"bucketed_write_{uuid.uuid4().hex}"
+    (
         df.write.format("parquet")
         .mode("overwrite")
         .bucketBy(buckets, keys[0], *keys[1:])
         .sortBy(keys[0], *keys[1:])
+        .option("path", path)
+        .saveAsTable(scratch)
     )
-    if path is not None:
-        w = w.option("path", path)
-    w.saveAsTable(table)
+    df.sparkSession.sql(f"DROP TABLE {scratch}")
+
+
+def attach_bucketed(
+    spark: SparkSession,
+    name: str,
+    path: str,
+    key: str | list[str] | tuple[str, ...],
+    buckets: int,
+) -> str:
+    """Register the :func:`write_bucketed` files at ``path`` as table
+    ``name`` in this session's catalog and return the catalog name
+    (``name`` with every non-alphanumeric character replaced by ``_``).
+    Table metadata does not survive a new session without a persistent
+    metastore, so every persisted bucketed store (the gate indexes, the
+    previous-crawl snapshot, the contamination epochs) reaches the
+    planner through this one CREATE TABLE with the matching CLUSTERED
+    BY spec; probe joins on ``key`` then scan the saved side with zero
+    exchange.  A no-op when ``name`` is already registered."""
+    name = "".join(c if c.isalnum() else "_" for c in name)
+    if spark.catalog.tableExists(name):
+        return name
+    keys = ", ".join([key] if isinstance(key, str) else key)
+    cols = ", ".join(
+        f"`{f.name}` {f.dataType.simpleString()}"
+        for f in spark.read.parquet(path).schema.fields
+    )
+    spark.sql(
+        f"CREATE TABLE {name} ({cols}) USING parquet "
+        f"CLUSTERED BY ({keys}) SORTED BY ({keys}) INTO {buckets} BUCKETS "
+        f"LOCATION '{path}'"
+    )
+    return name
+
+
+def build_once(spark: SparkSession, final: str, write) -> str:
+    """Build the store at ``final`` once and return its path: a
+    ``_SUCCESS`` marker means built; otherwise ``write(tmp)`` fills a
+    per-process temp dir that is renamed into place, so a crashed
+    build can never be mistaken for a complete one."""
+    if os.path.exists(os.path.join(final, "_SUCCESS")):
+        return final
+    # about to (re)build: drop any stale plan handle cached for this
+    # path in THIS session (ADVICE r11 — the plan cache pins schema +
+    # file listing at first read and must not survive a rebuild)
+    from aprs2influxdb_spark.functions.plancache import invalidate_path
+
+    invalidate_path(spark, final)
+    tmp = f"{final}.tmp{os.getpid()}"
+    write(tmp)
+    os.makedirs(os.path.dirname(final), exist_ok=True)
+    try:
+        os.rename(tmp, final)
+    except OSError:
+        # lost a benign race: another session built it first
+        shutil.rmtree(tmp, ignore_errors=True)
+        if not os.path.exists(os.path.join(final, "_SUCCESS")):
+            raise
+    return final
 
 
 def compact_packets(
@@ -141,8 +207,6 @@ def compact_packets(
     )
     # rows-per-byte varies little within one table; estimate bytes from
     # the table's overall ratio (cheap, single pass over footers)
-    import os
-
     total_bytes = 0
     for root, _dirs, files in os.walk(path):
         total_bytes += sum(

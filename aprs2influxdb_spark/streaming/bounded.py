@@ -949,6 +949,32 @@ def sharded_bucket_gate(banded: DataFrame, n_shards: int) -> DataFrame:
     )
 
 
+def _lsh_banded(src: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+    """``(doc_id, text)`` → ``(doc_id, band, key)``: word 3-shingles,
+    ``num_hashes`` MinHash signatures and ``bands`` band keys — the
+    banding the batch LSH index applies, shared by the stream gate, its
+    drained index and the cycle.  ``src`` arrives already spread
+    (``spread_for_compute`` / ``spread_stream_for_compute``): a
+    byte-small input is otherwise ONE partition and the 16-hash stage
+    runs serially."""
+    from aprs2influxdb_spark.functions.hashing import hashed_shingles
+    from aprs2influxdb_spark.operators.dedup import (
+        _signatures_from_shingles,
+        banded_keys,
+        tokens_col,
+    )
+
+    arr = src.select(
+        F.col("doc_id"), hashed_shingles(tokens_col("text"), 3).alias("sh")
+    )
+    return banded_keys(
+        _signatures_from_shingles(arr, "doc_id", num_hashes),
+        "doc_id",
+        num_hashes,
+        bands,
+    )
+
+
 def lsh_banded_docs(
     spark: SparkSession,
     sf_dir: str,
@@ -966,20 +992,11 @@ def lsh_banded_docs(
     still scans the parquet inputs — and consumers derive their
     segment/epoch variants with cheap ``doc_id`` filters, which Catalyst
     pushes back below the banding projections."""
-    from aprs2influxdb_spark.functions.hashing import hashed_shingles
     from aprs2influxdb_spark.functions.partitioning import spread_for_compute
     from aprs2influxdb_spark.functions.plancache import table_plan
-    from aprs2influxdb_spark.operators.dedup import (
-        _signatures_from_shingles,
-        banded_keys,
-        tokens_col,
-    )
 
     def _build() -> DataFrame:
         if streaming:
-            # spread the narrow (doc_id, text) BEFORE the signature
-            # expressions: a single-file micro-batch is ONE partition,
-            # so the 16-hash stage would run serially
             src = spread_stream_for_compute(
                 stream_docs(spark, sf_dir).select("doc_id", "text")
             )
@@ -989,15 +1006,7 @@ def lsh_banded_docs(
                     "doc_id", "text"
                 )
             )
-        arr = src.select(
-            F.col("doc_id"), hashed_shingles(tokens_col("text"), 3).alias("sh")
-        )
-        return banded_keys(
-            _signatures_from_shingles(arr, "doc_id", num_hashes),
-            "doc_id",
-            num_hashes,
-            bands,
-        )
+        return _lsh_banded(src, num_hashes, bands)
 
     return table_plan(
         spark, ("lsh_banded", sf_dir, streaming, num_hashes, bands), _build
@@ -1005,10 +1014,9 @@ def lsh_banded_docs(
 
 
 def bucket_index_of(banded: DataFrame) -> DataFrame:
-    """``(key, p_first, p_last)`` bucket aggregate of an
-    already-banded frame — the drain target, factored out of
-    :func:`lsh_gate_index` so callers holding a memoized banded handle
-    skip rebuilding the signature tree."""
+    """``(key, p_first, p_last)`` bucket aggregate of an already-banded
+    frame — the drain target every gate persists with
+    :func:`persist_gate_index`."""
     return banded.groupBy("key").agg(
         F.min("doc_id").alias("p_first"), F.max("doc_id").alias("p_last")
     )
@@ -1021,112 +1029,63 @@ def lsh_gate_index(
     bucket over an already-ingested corpus — exactly the state the
     keyed gate would be holding for those docs, rebuilt as a batch
     aggregate with the same banding the stream applies.  The gates
-    persist it bucketed on ``key`` through ``persist_gate_index`` (the
-    ``epoch_state`` discipline: ``write_bucketed`` + CLUSTERED BY
-    re-attach) and probe it with ``probe_gate_index``, so the
-    stream-static join never shuffles the saved side at ANY scale —
-    the index is one 40-byte row per distinct bucket of the drained
-    corpus, i.e. O(corpus), NOT broadcast-sized at 100 TB."""
-    from aprs2influxdb_spark.functions.hashing import hashed_shingles
+    persist it bucketed on ``key`` through ``persist_gate_index`` and
+    probe it with ``probe_gate_index``, so the stream-static join never
+    shuffles the saved side at ANY scale — the index is one 40-byte row
+    per distinct bucket of the drained corpus, i.e. O(corpus), NOT
+    broadcast-sized at 100 TB."""
     from aprs2influxdb_spark.functions.partitioning import spread_for_compute
-    from aprs2influxdb_spark.operators.dedup import (
-        _signatures_from_shingles,
-        banded_keys,
-        tokens_col,
-    )
 
-    # spread the narrow projection before the 16-hash stage: the index
-    # build over a byte-small corpus segment otherwise hashes serially
-    # (same fix as the stream side; no-op when the scan is already wide)
-    arr = spread_for_compute(docs.select("doc_id", "text")).select(
-        F.col("doc_id"), hashed_shingles(tokens_col("text"), 3).alias("sh")
+    return bucket_index_of(
+        _lsh_banded(
+            spread_for_compute(docs.select("doc_id", "text")), num_hashes, bands
+        )
     )
-    banded = banded_keys(
-        _signatures_from_shingles(arr, "doc_id", num_hashes),
-        "doc_id",
-        num_hashes,
-        bands,
-    )
-    return bucket_index_of(banded)
 
 
 GATE_INDEX_BUCKETS = 16
-#: Broadcast of the gate index is kept ONLY under this explicit row
-#: bound (verdict r10 weak #1): the index grows with the DRAINED CORPUS
-#: — one 40-byte row per distinct band bucket ever seen — so at 100 TB
-#: it is billions of rows and a forced broadcast OOMs the driver and
-#: every executor.  Default 0: the gates always probe the PERSISTED
-#: BUCKETED index (saved side scans with zero exchange; only the
-#: micro-batch shuffles).  A deployment that KNOWS its drained corpus
-#: is dimension-sized may raise this to reclaim the broadcast.
-GATE_INDEX_BROADCAST_MAX_ROWS = 0
 GATE_INDEX_VERSION = 1
 
 
 def persist_gate_index(
-    spark: SparkSession,
-    index: DataFrame,
-    store_key: str,
-    n_buckets: int = GATE_INDEX_BUCKETS,
+    spark: SparkSession, index: DataFrame, store_key: str
 ) -> DataFrame:
     """Persist a drained-gate ``(key, p_first, p_last)`` index BUCKETED
-    on ``key`` and return it as a catalog-attached DataFrame — the
-    ``epoch_state`` discipline (``storage.write_bucketed`` + CREATE
-    TABLE CLUSTERED BY re-attach) applied to the ingest gates: the
-    stream-static probe join then plans with ZERO exchange on the
-    saved side at any scale (the scan itself satisfies the hash
-    partitioning), instead of force-broadcasting a table that grows
-    with the drained corpus.  Build is once per ``store_key``
-    (temp-dir + atomic rename, the media-store discipline); later
-    calls re-attach the existing files."""
+    on ``key`` once per ``store_key`` (``storage.build_once``) and
+    return it through this session's catalog
+    (``storage.attach_bucketed``): the stream-static probe join then
+    plans with ZERO exchange on the saved side at any scale (the scan
+    itself satisfies the hash partitioning) — the index grows with the
+    drained corpus, so it is never broadcast."""
     from aprs2influxdb_spark.media_store import _cache_root
-    from aprs2influxdb_spark.storage import write_bucketed
-
-    final = os.path.join(
-        _cache_root(), f"gate{GATE_INDEX_VERSION}-{store_key}"
+    from aprs2influxdb_spark.storage import (
+        attach_bucketed,
+        build_once,
+        write_bucketed,
     )
-    name = "gate_index_" + "".join(
-        c if c.isalnum() else "_" for c in f"{GATE_INDEX_VERSION}_{store_key}"
+
+    final = build_once(
+        spark,
+        os.path.join(_cache_root(), f"gate{GATE_INDEX_VERSION}-{store_key}"),
+        lambda tmp: write_bucketed(index, tmp, GATE_INDEX_BUCKETS, "key"),
     )
-    if not os.path.exists(os.path.join(final, "_SUCCESS")):
-        tmp = f"{final}.tmp{os.getpid()}"
-        write_bucketed(index, name, n_buckets, "key", path=tmp)
-        spark.sql(f"DROP TABLE IF EXISTS {name}")  # re-point at final
-        try:
-            os.rename(tmp, final)
-        except OSError:
-            # lost a benign race: another session built it first
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not os.path.exists(os.path.join(final, "_SUCCESS")):
-                raise
-    if not spark.catalog.tableExists(name):
-        schema = spark.read.parquet(final).schema
-        cols = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
+    return spark.table(
+        attach_bucketed(
+            spark,
+            f"gate_index_{GATE_INDEX_VERSION}_{store_key}",
+            final,
+            "key",
+            GATE_INDEX_BUCKETS,
         )
-        spark.sql(
-            f"CREATE TABLE {name} ({cols}) USING parquet "
-            f"CLUSTERED BY (key) SORTED BY (key) "
-            f"INTO {n_buckets} BUCKETS LOCATION '{final}'"
-        )
-    return spark.table(name)
+    )
 
 
-def probe_gate_index(
-    banded: DataFrame,
-    index: DataFrame,
-    broadcast_max_rows: int = GATE_INDEX_BROADCAST_MAX_ROWS,
-) -> DataFrame:
-    """LEFT-join the banded stream onto the gate index, scale-safely:
-    the default is a merge join against the BUCKETED saved side (zero
-    exchange there — only the micro-batch's banded rows shuffle, and
-    they are O(batch)); ``F.broadcast`` survives only under the
-    explicit ``broadcast_max_rows`` bound, because the index is
-    O(drained corpus), not broadcast-sized in general.  The hint
-    matters: without it the planner's size estimate would re-broadcast
-    the small-sf index and the 100 TB plan shape would go untested."""
-    if broadcast_max_rows > 0 and index.count() <= broadcast_max_rows:
-        return banded.join(F.broadcast(index), "key", "left")
+def probe_gate_index(banded: DataFrame, index: DataFrame) -> DataFrame:
+    """LEFT-join the banded stream onto the gate index as a merge join
+    against the BUCKETED saved side: zero exchange there — only the
+    micro-batch's banded rows shuffle, and they are O(batch).  The hint
+    matters: without it the planner's size estimate would broadcast the
+    small-sf index and the 100 TB plan shape would go untested."""
     return banded.join(index.hint("merge"), "key", "left")
 
 
@@ -1247,8 +1206,8 @@ def streaming_lsh_near_dup(
     weak #2 — with ``NoTimeout`` and no compaction the plain gate's
     state grows O(corpus) for the stream's lifetime): the corpus below
     the median doc_id plays the previously-ingested epoch, drained
-    into the persisted gate index (``lsh_gate_index`` — the
-    ``epoch_state`` persisted-bucketed-probe discipline), the stream
+    into the persisted bucketed gate index (``lsh_gate_index`` +
+    ``persist_gate_index``), the stream
     carries only post-drain arrivals, and each banded row
     stream-static-joins the index so covered buckets anchor from the
     persisted min, retaining only a MINIMAL (anchor, max_seen)
@@ -1356,9 +1315,9 @@ def streaming_srp_near_dup(
         n_vecs = max(1, n_vecs // 2)  # the post-drain window
         index = persist_gate_index(
             spark,
-            _srp_gate_banded(batch.filter(F.col("vec_id") <= split), np_)
-            .groupBy("key")
-            .agg(F.min("doc_id").alias("p_first"), F.max("doc_id").alias("p_last")),
+            bucket_index_of(
+                _srp_gate_banded(batch.filter(F.col("vec_id") <= split), np_)
+            ),
             f"srp-{_sf_key(sf_dir)}",
         )
         src = src.filter(F.col("vec_id") > split)

@@ -72,7 +72,7 @@ class TestJoinStrategy:
         the planner would broadcast and hide whether bucketing worked;
         at 100 TB neither side is broadcastable and this bucketed SMJ
         is the plan that matters."""
-        from aprs2influxdb_spark.storage import write_bucketed
+        from aprs2influxdb_spark.storage import attach_bucketed, write_bucketed
 
         li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
             "l_orderkey", "l_quantity"
@@ -80,8 +80,12 @@ class TestJoinStrategy:
         o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
             "o_orderkey", "o_totalprice"
         )
-        write_bucketed(li, "li_bucketed", 8, "l_orderkey", path=str(tmp_path / "li"))
-        write_bucketed(o, "o_bucketed", 8, "o_orderkey", path=str(tmp_path / "o"))
+        for df, name, key in (
+            (li, "li_bucketed", "l_orderkey"),
+            (o, "o_bucketed", "o_orderkey"),
+        ):
+            write_bucketed(df, str(tmp_path / name), 8, key)
+            attach_bucketed(spark, name, str(tmp_path / name), key, 8)
         prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
@@ -162,6 +166,49 @@ class TestJoinStrategy:
                 spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         finally:
             spark.sql("DROP TABLE IF EXISTS gate_index_1_plantest_lsh")
+
+    def test_gate_index_reattaches_without_rebuild(
+        self, spark, sf_dir, tmp_path, monkeypatch
+    ):
+        """A new session finds the persisted gate index's files but no
+        catalog entry.  Persisting again must re-attach those files
+        without rebuilding them, with the bucket layout intact: the
+        probe join still scans the saved side bucketed and returns the
+        same rows."""
+        import os
+
+        from aprs2influxdb_spark.streaming.bounded import (
+            lsh_banded_docs,
+            lsh_gate_index,
+            persist_gate_index,
+            probe_gate_index,
+        )
+
+        monkeypatch.setenv("SPARK_GRAFT_MEDIA_CACHE", str(tmp_path / "cache"))
+        name = "gate_index_1_plantest_reattach"
+        marker = tmp_path / "cache" / "gate1-plantest-reattach" / "_SUCCESS"
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        banded = lsh_banded_docs(spark, sf_dir)
+        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            index = persist_gate_index(spark, lsh_gate_index(docs), "plantest-reattach")
+            built = os.path.getmtime(marker)
+            # (doc_id, band) is unique, so the sort never compares nulls
+            rows = sorted(map(tuple, probe_gate_index(banded, index).collect()))
+            spark.sql(f"DROP TABLE {name}")  # what a fresh session sees
+            index = persist_gate_index(spark, lsh_gate_index(docs), "plantest-reattach")
+            assert os.path.getmtime(marker) == built
+            probed = probe_gate_index(banded, index)
+            scans = [
+                line for line in executed_plan(probed).splitlines()
+                if "Scan parquet" in line and name in line
+            ]
+            assert scans and all("Bucketed: true" in s for s in scans), scans
+            assert sorted(map(tuple, probed.collect())) == rows
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
 
     def test_new_query_shuffle_budgets(self, spark, sf_dir):
         """Plan-shape budgets for the round's additions: the scan-only

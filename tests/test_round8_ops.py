@@ -301,14 +301,14 @@ class TestEpochStateBucketing:
     rescreen shuffles ONLY the batch; the saved corpus reaches every
     join through its bucket layout."""
 
-    def _persist(self, spark, sf_dir, path, **kw):
+    def _persist(self, spark, sf_dir, path):
         from aprs2influxdb_spark.operators.epoch_state import (
             persist_contamination_state,
         )
 
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        persist_contamination_state(docs, emb, path, **kw)
+        persist_contamination_state(docs, emb, path)
         return docs, emb
 
     def _batch(self, spark):
@@ -349,27 +349,22 @@ class TestEpochStateBucketing:
         bad = [s for s in scans if "Bucketed: true" not in s]
         assert not bad, f"epoch-table scans without bucket use:\n" + "\n".join(bad)
 
-    def test_bucketed_probe_row_equal_to_plain(self, spark, sf_dir, tmp_path):
-        """Same epoch persisted bucketed (default) and plain
-        (n_buckets=0): the frozen-batch rescreen returns identical
-        rows — the layout is a performance property, never a result
-        property.  Also covers the pre-round-8 fallback (a saved
-        epoch without bucket metadata still loads)."""
-        from aprs2influxdb_spark.operators.epoch_state import rescreen_new_batch
+    def test_repersist_same_path_reloads_new_files(self, spark, sf_dir, tmp_path):
+        """Persisting an epoch again at a path this session already
+        loaded overwrites its files; the next load must read the new
+        files, not the catalog's listing of the deleted ones."""
+        from aprs2influxdb_spark.operators.epoch_state import (
+            load_contamination_state,
+            persist_contamination_state,
+        )
 
-        sb = str(tmp_path / "eb")
-        sp = str(tmp_path / "ep")
-        self._persist(spark, sf_dir, sb)
-        self._persist(spark, sf_dir, sp, n_buckets=0)
-        new_docs, new_emb = self._batch(spark)
-        got_b = sorted(
-            tuple(r) for r in rescreen_new_batch(spark, sb, new_docs, new_emb).collect()
+        state = str(tmp_path / "epochR")
+        docs, emb = self._persist(spark, sf_dir, state)
+        assert load_contamination_state(spark, state)["shingles"].count() == 500
+        persist_contamination_state(
+            docs.filter("doc_id % 2 = 0"), emb.filter("vec_id % 2 = 0"), state
         )
-        got_p = sorted(
-            tuple(r) for r in rescreen_new_batch(spark, sp, new_docs, new_emb).collect()
-        )
-        assert got_b == got_p
-        assert len(got_b) == 2
+        assert load_contamination_state(spark, state)["shingles"].count() == 250
 
 
 class TestBroadcastCalibration:

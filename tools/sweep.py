@@ -70,18 +70,12 @@ def main() -> int:
 
     stderr_buf = _tee_stderr()  # BEFORE the JVM launches
 
-    from pyspark.sql import SparkSession
-
     from aprs2influxdb_spark.queries import registry
+    from aprs2influxdb_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("oracle-sweep")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "24g")
-        .getOrCreate()
-    )
+    # cores and driver memory come from SPARK_GRAFT_CPUS /
+    # SPARK_DRIVER_MEMORY, as for the tests and the bench
+    spark = get_spark("oracle-sweep")
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()
@@ -99,7 +93,10 @@ def main() -> int:
             s_cols = [c.lower() for c in sdf.columns]
             s_rows = [tuple(r) for r in sdf.collect()]
             if sql is None:
-                print(f"{name:34s} rows-only  n={len(s_rows)}  {time.time()-t0:.1f}s")
+                print(
+                    f"{name:34s} rows-only  n={len(s_rows)}  {time.time()-t0:.1f}s",
+                    flush=True,
+                )
                 continue
             res = con.execute(sql)
             d_cols = [c[0].lower() for c in res.description]
@@ -119,10 +116,13 @@ def main() -> int:
                     mism = [(a, b) for a, b in zip(sc, dc) if a != b][:3]
                     bad.append((name, f"values {mism}"))
             status = "FAIL" if bad and bad[-1][0] == name else "ok"
-            print(f"{name:34s} {status}  n={len(s_rows)}  {time.time()-t0:.1f}s")
+            print(
+                f"{name:34s} {status}  n={len(s_rows)}  {time.time()-t0:.1f}s",
+                flush=True,
+            )
         except Exception as exc:  # noqa: BLE001 — sweep must report, not die
             bad.append((name, f"error {exc!r}"))
-            print(f"{name:34s} ERROR {exc!r}")
+            print(f"{name:34s} ERROR {exc!r}", flush=True)
     # the log gate: any CodeGenerator compile failure during the sweep
     # is a finding, exactly like a value mismatch — fallbacks must not
     # creep in silently (results are unaffected, throughput is)
@@ -132,10 +132,11 @@ def main() -> int:
         bad.append(("<log>", f"{n_codegen} CodeGenerator compile failure(s)"))
     print(
         f"\nswept {len(names)} entries, {len(bad)} mismatches "
-        f"(codegen errors: {n_codegen})"
+        f"(codegen errors: {n_codegen})",
+        flush=True,
     )
     for name, why in bad:
-        print(f"  {name}: {why[:300]}")
+        print(f"  {name}: {why[:300]}", flush=True)
     return 1 if bad else 0
 
 
